@@ -125,15 +125,12 @@ object Bench {
     // charged its full build cost and benchdiff flags it as a
     // regression (the r13/r14 d2/d21/d22/x38 discrepancy). Fatal
     // errors propagate (ADVICE r15); NonFatal per-query errors are
-    // recorded by the timed pass. Opt-out knob for dev iteration only.
+    // recorded by the timed pass.
     val prepassT0 = System.nanoTime()
-    val prepass = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREPASS", "1") != "0"
-    if (prepass) {
-      val pruned = operators.Warehouse.pruneSuperseded(spark)
-      if (pruned > 0)
-        System.err.println(s"[bench] pruned $pruned superseded standing entries")
-      StandingWarm.warm(spark, sfDir, selected)
-    }
+    val pruned = operators.Warehouse.pruneSuperseded(spark)
+    if (pruned > 0)
+      System.err.println(s"[bench] pruned $pruned superseded standing entries")
+    StandingWarm.warm(spark, sfDir, selected)
     val prepassSec = (System.nanoTime() - prepassT0) / 1e9
     // Block-manager hygiene between timed queries (r17): several
     // operators materialize reused subtrees with eager localCheckpoint
@@ -153,11 +150,11 @@ object Bench {
     // just stop inheriting each other's garbage.
     // The exclusion set is computed LIVE from the session caches, not
     // from a frozen post-prepass snapshot (ADVICE r17): a shared stage
-    // first built DURING a timed pass (pre-pass disabled, a bench-only
-    // subset miss, a swallowed warm failure) is protected the moment
-    // it lands in its cache, and the pre-pass's own per-execution
-    // scratch — which the frozen snapshot permanently pinned — is
-    // released by the first sweep below.
+    // first built DURING a timed pass (a bench-only subset miss, a
+    // swallowed warm failure) is protected the moment it lands in its
+    // cache, and the pre-pass's own per-execution scratch — which the
+    // frozen snapshot permanently pinned — is released by the first
+    // sweep below.
     def sweepScratch(): Unit = {
       val live = operators.SessionCaches.liveRddIds(spark)
       spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
@@ -356,10 +353,10 @@ object Bench {
 }
 
 /** Accumulates scheduler-level counters between resets — the bench's
-  * per-query executor-task-time / shuffle-byte meter (the Probe.Meter
-  * shape, reused here so cross-round comparisons can rank movers on
-  * CPU rather than this host's ±30% wall clock). Reads happen after a
-  * deterministic listener-bus drain, outside the timed window. */
+  * per-query executor-task-time / shuffle-byte meter, so cross-round
+  * comparisons can rank movers on CPU rather than this host's ±30%
+  * wall clock. Reads happen after a deterministic listener-bus drain,
+  * outside the timed window. */
 private final class BenchMeter
     extends org.apache.spark.scheduler.SparkListener {
   private val taskMs = new java.util.concurrent.atomic.AtomicLong

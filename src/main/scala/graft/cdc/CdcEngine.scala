@@ -59,19 +59,9 @@ class CdcEngine(
 
   def currentOffset: Long = offset
 
-  /** Log rows → typed Change records. The log timestamp is SQLite text
-    * ('yyyy-MM-dd HH:mm:ss.SSS' UTC); parsed with the session in UTC
-    * (reference triggers.go:182 layout parity). */
-  def toChanges(logRows: DataFrame): Dataset[Change] = {
-    val fmt = if (subsecTimestamps) Change.LogTsFormat else Change.LogTsFormatNoSubsec
-    logRows.select(
-      col("tablename").as("table"),
-      to_timestamp(col("timestamp"), fmt).as("timestamp"),
-      col("operation"),
-      col("before"),
-      col("after"))
-      .as[Change]
-  }
+  /** Log rows → typed Change records ([[Change.fromLog]]). */
+  def toChanges(logRows: DataFrame): Dataset[Change] =
+    Change.fromLog(logRows, subsecTimestamps)
 
   /** Drain every available change in ordered batches, ack after each
     * (reference drainChanges, triggers.go:164-223). Returns the number of
@@ -108,16 +98,12 @@ class CdcEngine(
             // duplicates are expected) — main-first would add a
             // duplicate-delivery mode for successfully-handled good
             // rows that the pre-dead-letter engine never had.
-            val fmt = if (subsecTimestamps) Change.LogTsFormat
-              else Change.LogTsFormatNoSubsec
+            val fmt = Change.logTsFormat(subsecTimestamps)
             val bad = try_to_timestamp(col("timestamp"), lit(fmt)).isNull ||
               col("tablename").isNull || col("operation").isNull
             val quarantined = batchDf.filter(bad)
-            if (!quarantined.isEmpty) dl.handle(
-              quarantined.select(
-                col("tablename").as("table"),
-                try_to_timestamp(col("timestamp"), lit(fmt)).as("timestamp"),
-                col("operation"), col("before"), col("after")).as[Change])
+            if (!quarantined.isEmpty)
+              dl.handle(Change.fromLog(quarantined, subsecTimestamps, tolerant = true))
             handler.handle(toChanges(batchDf.filter(!bad)))
         }
         log.truncate(maxId)                // ack: at-least-once boundary
@@ -167,14 +153,17 @@ class CdcEngine(
     * shape (triggers.go:122-162); the default [[Wakeup.poll]] gate degrades
     * to fixed-interval polling. Either way delivery is driven by the log
     * CONTENTS — a missed event only adds latency, never loses data. */
-  def cdc(): Unit = once {
+  def cdc(): Unit = once { tail() }
+
+  /** The continuous loop behind cdc() and bootstrapAndCdc(): drain, then
+    * wait on the wakeup gate, until close(). */
+  private def tail(): Unit =
     try {
       while (!stopped.get()) {
         drainAll()
         wakeup.await(pollIntervalMs): Unit
       }
     } finally wakeup.close()
-  }
 
   /** Drain-and-exit (Trigger.AvailableNow analog). */
   def cdcAvailableNow(): Long = once { drainAll() }
@@ -186,12 +175,7 @@ class CdcEngine(
   def bootstrapAndCdc(tables: Seq[(String, DataFrame)], blobSupport: Boolean = false): Unit =
     once {
       bootstrapImpl(tables, blobSupport)
-      try {
-        while (!stopped.get()) {
-          drainAll()
-          wakeup.await(pollIntervalMs): Unit
-        }
-      } finally wakeup.close()
+      tail()
     }
 
   /** Drain-and-exit variant of bootstrapAndCdc for tests/batch jobs. */

@@ -1,5 +1,7 @@
 package graft.cdc
 
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.functions.{col, lit, to_timestamp, try_to_timestamp}
 import org.apache.spark.sql.types._
 
 /** The engine's change record — the only tuple type the reference engine
@@ -54,4 +56,25 @@ object Change {
   val LogTsFormat = "yyyy-MM-dd HH:mm:ss.SSS"
   /** Compat mode without subseconds (reference triggers.go:39-44). */
   val LogTsFormatNoSubsec = "yyyy-MM-dd HH:mm:ss"
+
+  def logTsFormat(subsecTimestamps: Boolean): String =
+    if (subsecTimestamps) LogTsFormat else LogTsFormatNoSubsec
+
+  /** Log rows (logSchema) → typed Change records — the one decode the
+    * engine, the dead-letter split and the streaming source share. The
+    * log timestamp is SQLite text, parsed as UTC (reference
+    * triggers.go:182 layout parity); `tolerant` parses an unparseable
+    * timestamp to null instead of failing under ANSI parsing. */
+  def fromLog(logRows: DataFrame, subsecTimestamps: Boolean,
+      tolerant: Boolean = false): Dataset[Change] = {
+    val fmt = logTsFormat(subsecTimestamps)
+    logRows.select(
+      col("tablename").as("table"),
+      (if (tolerant) try_to_timestamp(col("timestamp"), lit(fmt))
+       else to_timestamp(col("timestamp"), fmt)).as("timestamp"),
+      col("operation"),
+      col("before"),
+      col("after"))
+      .as[Change](Encoders.product[Change])
+  }
 }

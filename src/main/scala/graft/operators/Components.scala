@@ -173,7 +173,7 @@ object Components {
     * (endpoint lookup, new-id anti check, final remap) — linear reads,
     * zero exchanges, and on a bucketed standing table they prune to
     * the probed buckets. Measured flat-in-standing-size at fixed batch
-    * (ScaleProbe `components_absorb`).
+    * by an earlier synthetic-scale probe.
     *
     * @param standing (id, rep) — the current resolution (rep = min id)
     * @param newNodes one `id` column — the batch's ids (isolated ones

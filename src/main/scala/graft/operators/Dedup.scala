@@ -1080,22 +1080,20 @@ object Dedup {
     // window-explode + distinct pipeline executes TWICE per side.
     // CUT REMOVED by measurement (r18, VERDICT r17 #4): the r17 EAGER
     // barrier cost more wall than the saved recompute in every bench
-    // sample (d19 0.81×), and the same-JVM A/B/C (CutProbe, table in
-    // OPTIMIZATION_r18.md) read none 1.35 s < lazy 1.61 < eager 1.68
+    // sample (d19 0.81×), and a same-JVM interleaved A/B/C (table in
+    // OPTIMIZATION_r18.md §4a) read none 1.35 s < lazy 1.61 < eager 1.68
     // at IDENTICAL task-time (2.5 s) — at this operator the window
     // pipeline recompute is cheaper than materializing the corpus-
     // gram-sized frames (which ADVICE r17 also flagged as an
     // unrecoverable executor-local materialization at warehouse
-    // scale). Default "none" = two narrow resilient scans per side;
-    // the mode stays probe-flippable.
-    val cw = Cuts.cut(distinctWindows(corpus).select(col("g")).distinct(),
-      default = "none")
+    // scale). So: two narrow resilient scans per side.
+    val cw = distinctWindows(corpus).select(col("g")).distinct()
     val sketch = cw
       .select(bloomPositions(col("g")).as("pos"))
       .groupBy()
       .agg(graft.functions.GraftFunctions.bloom_sketch(col("pos"), BloomMBits)
         .as("bits"))
-    val iw = Cuts.cut(distinctWindows(incoming), default = "none")
+    val iw = distinctWindows(incoming)
     val tested = iw
       .withColumn("pos", bloomPositions(col("g")))
       .crossJoin(broadcast(sketch))

@@ -813,7 +813,7 @@ object Events {
     val mx = ev.agg(max(col("event_id")).as("mx"))
     // `t` is referenced three times (support counts, retraction
     // filter, the insert side); a cut was A/B/C-measured in r18
-    // (CutProbe: lazy 0.71 / eager 0.70 / none 0.74 s — all within
+    // (same-JVM interleaved: lazy 0.71 / eager 0.70 / none 0.74 s — all within
     // noise, CPU 0.3-0.5 s) and left OUT: three narrow 100k-row event
     // scans cost what one materialization does at this table's scale,
     // and the uncut form keeps resilient lineage.
@@ -1058,7 +1058,7 @@ object Events {
     * buffer removed: task memory is independent of the hottest key's
     * history length (the fold-equivalence with the collect_list form
     * is spec-pinned on adversarial orderings, and the hyperactive-key
-    * cost is a ScaleProbe row). */
+    * cost was measured by an earlier synthetic-scale probe). */
   def patternCount(ev: DataFrame, stages: Seq[String]): DataFrame =
     patternCountSets(ev, stages.map(Seq(_)))
 

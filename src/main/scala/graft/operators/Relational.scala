@@ -579,11 +579,8 @@ object Relational {
     * quartile fractions are dyadic. For high-cardinality value columns
     * the same shape works with a coarse pre-bucketing pass (histogram →
     * candidate range → exact pass over one bucket). */
-  def q13DistinctQuantiles(s: SparkSession, d: String): DataFrame =
-    q13Pipeline(lineitem(s, d))
-
-  /** q13 over a caller-supplied lineitem frame (ScaleProbe reuses it). */
-  def q13Pipeline(li: DataFrame): DataFrame = {
+  def q13DistinctQuantiles(s: SparkSession, d: String): DataFrame = {
+    val li = lineitem(s, d)
     val flag = col("l_returnflag")
     val hist = li
       .groupBy(flag, col("l_quantity"))
@@ -662,6 +659,8 @@ object Relational {
     * a recursive term, so a recursive CTE cannot state PageRank; six
     * unrolled aggregate-join rounds can). */
   val PrIters = 6
+  /** pageRankLoop checkpoints every PrCadence-th round (and the last). */
+  val PrCadence = 6
   val PrScale = 1000000000L
   val PrOffset = 1000000L
 
@@ -805,13 +804,10 @@ object Relational {
       // 2 ≈ 2.7 s, 3 and fully-unrolled ≈ 2.1–2.5 s within noise;
       // re-measured r17 after the codegen/sweep changes: cadence 3 ≈
       // 2.9-3.1 s / 24 AQE stage-jobs, cadence 6 measurably fewer
-      // barriers at PrIters = 6; r18 settled it with an interleaved
-      // same-JVM sweep — table in OPTIMIZATION_r18.md); lineage still
-      // truncates before planning balloons at larger `iters`. The
-      // system property exists ONLY for that sweep ([[graft.PrProbe]]);
-      // query paths never set it.
-      val cadence = sys.props.get("graft.pr.cadence").map(_.toInt).getOrElse(6)
-      if (i % cadence == 0 || i == iters) rank = rank.localCheckpoint()
+      // barriers at PrIters = 6; no interleaved sweep table was ever
+      // produced, so 6 stands on the r17 numbers); lineage still
+      // truncates before planning balloons at larger `iters`.
+      if (i % PrCadence == 0 || i == iters) rank = rank.localCheckpoint()
     }
     rank
   }

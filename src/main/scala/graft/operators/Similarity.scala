@@ -207,8 +207,8 @@ object Similarity {
   }
 
   /** The s35 pipeline over any [[withNorm]]-prepared frame (queries =
-    * vec_id < NQueries, the standard convention) — probed for
-    * corpus-linearity by ScaleProbe's `range_lsh` shape. `radius` is
+    * vec_id < NQueries, the standard convention) — linear in the
+    * corpus by construction (a broadcast probe side). `radius` is
     * the multiprobe recall knob s36 measures: radius 2 probes the
     * 2-bit hamming ball (22 keys/query at NPlanes = 6 — still a
     * broadcast-trivial probe side) and buys back the ≥2-bit-sketch
@@ -2058,13 +2058,13 @@ object Similarity {
       .withColumn("pr", row_number().over(wPool))
       .filter(col("pr") <= MmrPool)
       .select(col("qid"), col("nid"), col("cos_e6"))
-      // EAGER by measurement (r18 CutProbe: eager 1.64 s / 0.8 s CPU <
+      // EAGER by measurement (r18 same-JVM A/B/C: eager 1.64 s / 0.8 s CPU <
       // lazy 1.77/1.2 < none 3.00/1.3): the five-pick unroll consumes
       // these frames from several concurrent AQE stage-jobs, and the
       // lazy cut lets racing consumers duplicate the corpus scan the
       // barrier exists to pay once. Query-sized frames, so the
       // blocking job is cheap.
-      .transform(Cuts.cut(_, default = "eager"))
+      .localCheckpoint()
     val ps = pool.select(col("qid"), col("nid").as("a"))
       .join(pool.select(col("qid"), col("nid").as("b")), Seq("qid"))
       .filter(col("a") =!= col("b"))
@@ -2075,7 +2075,7 @@ object Similarity {
       .select(col("qid"), col("a"), col("b"),
         round(cosine(dotFp9(col("a_emb"), col("b_emb")),
           col("a_norm"), col("b_norm")) * 1e6).cast("long").as("sim_e6"))
-      .transform(Cuts.cut(_, default = "eager")) // see pool's rationale
+      .localCheckpoint() // eager: see pool's rationale
     def scoreOf(cands: DataFrame): DataFrame = cands.withColumn("mmr_x10_e6",
       lit(MmrLambda10) * col("cos_e6") -
         lit(10L - MmrLambda10) * col("penalty_e6"))

@@ -238,10 +238,24 @@ object TextAnalysis {
     // occurrence stream (the r17 cut ADVICE flagged as a non-resilient
     // corpus-sized materialization) to the vocabulary-sized count
     // table, cut lazily.
-    val counts = Cuts.cut(documents(s, d)
+    //
+    // Lazy cuts (here and at every multiply-referenced token frame in
+    // the grid): Spark shares no subtrees within one DAG, so a frame
+    // referenced k times recomputes k×. `localCheckpoint(eager = false)`
+    // keeps the same LogicalRDD plan but fills its blocks inside the
+    // first consuming job — no barrier job, no blocking driver wait
+    // (r17's eager cuts measurably lost d19 and x40 wall time to that
+    // barrier) — and every later consumer reads them. Fault posture:
+    // the blocks are executor-local and unrecoverable after lineage
+    // truncation, which is acceptable for per-execution scratch
+    // recomputable by re-running the query — every cut site; loop
+    // invariants that pin nondeterminism (globalRank's range sample)
+    // keep an eager checkpoint.
+    val counts = documents(s, d)
       .select(col("doc_id"), col("text"))
       .select(explode(words(col("text"))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("exact_n")))
+      .groupBy(col("w")).agg(count(lit(1)).as("exact_n"))
+      .localCheckpoint(eager = false)
     val sketch = counts.select(cmsHashes(col("w")).as("hs"), col("exact_n"))
       .agg(graft.functions.GraftFunctions
         .cms_sketch_weighted(col("hs"), col("exact_n"), CmsDepth, CmsWidth)
@@ -311,11 +325,10 @@ object TextAnalysis {
     // lazy == eager at sf0.1 (0.69-0.72 s), so the corpus-shingle-
     // sized materialization (the ADVICE r17 scale concern: a large
     // non-resilient block) buys nothing here — the second scan
-    // recomputes cheaper. Mode stays probe-flippable.
-    val sh = Cuts.cut(documents(s, d)
+    // recomputes cheaper.
+    val sh = documents(s, d)
       .select(col("source"), words(col("text")).as("ws"))
-      .select(col("source"), explode(shingles3(col("ws"))).as("g")),
-      default = "none")
+      .select(col("source"), explode(shingles3(col("ws"))).as("g"))
     val hashed = sh.select(col("source"), hllHash(col("g")).as("h"))
     val sk = hashed.groupBy(col("source"))
       .agg(graft.functions.GraftFunctions.hll_sketch(col("h"), HllM).as("regs"))
@@ -546,17 +559,9 @@ object TextAnalysis {
     * scales linearly, a skewed partition does not. The length and top-k
     * windows share one doc_id partitioning (exchange reuse). The doc
     * count is a 1-row broadcast from a doc_id-only column scan. */
-  def x5Tfidf(s: SparkSession, d: String): DataFrame =
-    x5TfidfWith(s, d, words)
-
-  /** [[x5Tfidf]] with the tokenizer injectable — the r18 bisect hook
-    * (VERDICT r17 #1: adjudicate the suspected split_words-kernel
-    * regression with a same-JVM words-vs-wordsHof probe). Query paths
-    * always pass [[TextOps.words]]. */
-  private[graft] def x5TfidfWith(s: SparkSession, d: String,
-      wordsFn: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
+  def x5Tfidf(s: SparkSession, d: String): DataFrame = {
     val tf = documents(s, d)
-      .select(col("doc_id"), wordsFn(col("text")).as("ws"))
+      .select(col("doc_id"), words(col("text")).as("ws"))
       .select(col("doc_id"), explode(col("ws")).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
@@ -1140,12 +1145,13 @@ object TextAnalysis {
     // materialized once: the token stream feeds the model counts, the
     // totals AND the scoring join — without the cut the tokenizer ran
     // once per reference ([[lmModel]] re-derived it a second time)
-    val tok = Cuts.cut(docs
+    val tok = docs
       .withColumn("bucket", hashBucket(col("doc_id").cast("string")))
       .withColumn("split",
         when(col("bucket") < 80L, "train")
           .when(col("bucket") < 90L, "val").otherwise("test"))
-      .select(col("doc_id"), col("split"), explode(words(col("text"))).as("w")))
+      .select(col("doc_id"), col("split"), explode(words(col("text"))).as("w"))
+      .localCheckpoint(eager = false)
     // ≡ lmModel(docs): bucket < 80 IS the train split — derived from
     // the materialized token stream instead of a second tokenize
     val counts = tok.filter(col("split") === "train")
@@ -1187,8 +1193,8 @@ object TextAnalysis {
     // materialized once: referenced by the target model, the raw model
     // and the scoring chain (each model's totals re-derive it again) —
     // five tokenizer executions without the cut
-    val tok = Cuts.cut(docs.select(col("doc_id"), col("lang"),
-      explode(words(col("text"))).as("w")))
+    val tok = docs.select(col("doc_id"), col("lang"),
+      explode(words(col("text"))).as("w")).localCheckpoint(eager = false)
     val tgt = tok.filter(col("lang") === "en")
       .groupBy(col("w")).agg(count(lit(1)).as("ct"))
     val raw = tok.groupBy(col("w")).agg(count(lit(1)).as("cr"))
@@ -1329,7 +1335,7 @@ object TextAnalysis {
       // doc join) and Spark shares no subtrees within a DAG — without
       // a cut the tokenizer runs 3× per execution; materialize once
       // (lazy cut, r18)
-      .transform(Cuts.cut(_))
+      .localCheckpoint(eager = false)
     // adjacent pairs as a narrow generator: (ws[i], ws[i+1]), 1-based
     val big = base
       .filter(size(col("ws")) >= 2)
@@ -1342,7 +1348,7 @@ object TextAnalysis {
     val c2 = big.filter(col("split") === "train")
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
       // referenced twice (ctx roll-up + the scoring join) — same cut
-      .transform(Cuts.cut(_))
+      .localCheckpoint(eager = false)
     // context totals: occurrences of w1 AS A CONTEXT in train = Σ c₂(w1,·)
     val ctx = c2.groupBy(col("w1")).agg(sum(col("c")).as("ctx"))
     // V = train UNIGRAM vocab (the smoothing denominator ranges over
@@ -2536,14 +2542,14 @@ object TextAnalysis {
     // scored: pair scoring + final doc join) and c2 twice (ctx
     // roll-up + scoring join) — cut once each, tokenize once
     val mbase = staged(modelDocs).filter(col("split") === "train")
-      .transform(Cuts.cut(_))
+      .localCheckpoint(eager = false)
     val c2 = bigramsOf(mbase)
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
-      .transform(Cuts.cut(_))
+      .localCheckpoint(eager = false)
     val ctx = c2.groupBy(col("w1")).agg(sum(col("c")).as("ctx"))
     val v = mbase.select(explode(col("ws")).as("w"))
       .agg(count_distinct(col("w")).as("v"))
-    val base = staged(scoredDocs).transform(Cuts.cut(_))
+    val base = staged(scoredDocs).localCheckpoint(eager = false)
     val perDoc = bigramsOf(base)
       .join(c2, Seq("w1", "w2"), "left")
       .join(broadcast(ctx), Seq("w1"), "left")
@@ -3367,8 +3373,7 @@ object TextAnalysis {
 
   /** Census stage of [[x45NoveltyCurve]] over any per-batch doc-count
     * frame `nDocs` (batch, n_docs) and (shingle, batch) incidence
-    * frame `gb` — the ScaleProbe drives this form directly
-    * (`novelty_census` shape). Both shingle-keyed aggregates plan
+    * frame `gb`. Both shingle-keyed aggregates plan
     * exchange-free when `gb` rides a shingle-clustered layout; the
     * remaining shuffled rows are the batch-group finals. */
   def noveltyFromIncidence(nDocs: DataFrame, gb: DataFrame): DataFrame = {
@@ -3451,9 +3456,7 @@ object TextAnalysis {
     * md5 hashes, prefix union via explode + re-sketch (mergeability:
     * each of the k smallest of a union is among the k smallest of its
     * own set), then x43's integer estimator — (k−1)·2⁴⁸ over the kth
-    * hash's leading 48 bits, exact when the sketch is under-filled.
-    * The ScaleProbe drives this form directly (`novelty_sketch`
-    * shape). */
+    * hash's leading 48 bits, exact when the sketch is under-filled. */
   def noveltySketchFromIncidence(gb: DataFrame, k: Int): DataFrame = {
     val kL = k.toLong
     val perBatch = gb

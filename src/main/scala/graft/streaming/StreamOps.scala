@@ -20,19 +20,10 @@ import graft.cdc.Change
   */
 object StreamOps {
 
-  /** Log rows (Change.logSchema) → typed change records. Same decode as
-    * the micro-batch engine (CdcEngine.toChanges); the log timestamp is
-    * SQLite text, parsed as UTC (reference triggers.go:182). */
-  def changes(logRows: DataFrame, subsecTimestamps: Boolean = true): Dataset[Change] = {
-    val fmt = if (subsecTimestamps) Change.LogTsFormat else Change.LogTsFormatNoSubsec
-    logRows.select(
-      col("tablename").as("table"),
-      to_timestamp(col("timestamp"), fmt).as("timestamp"),
-      col("operation"),
-      col("before"),
-      col("after"))
-      .as[Change](Encoders.product[Change])
-  }
+  /** Log rows (Change.logSchema) → typed change records: the micro-batch
+    * engine's decode ([[Change.fromLog]]). */
+  def changes(logRows: DataFrame, subsecTimestamps: Boolean = true): Dataset[Change] =
+    Change.fromLog(logRows, subsecTimestamps)
 
   /** One row of the streaming materialized view: the newest change for
     * one primary key. `after` null (DELETE) means the row is gone.

@@ -1,7 +1,7 @@
 package org.apache.spark
 
 /** Minimal bridge to the (private[spark]) listener bus: a deterministic
-  * drain for measurement listeners. `Probe`/`Bench` attribute scheduler
+  * drain for measurement listeners. `Bench` attributes scheduler
   * counters (executor task time, shuffle bytes) to the run that just
   * finished; the bus delivers events asynchronously, so a fixed sleep
   * either wastes time or (under load) silently attributes a run's

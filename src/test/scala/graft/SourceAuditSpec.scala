@@ -1,0 +1,60 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Structural audit of the main source tree: the program's entry points
+  * are the four tool mains, and query code takes no switch from the
+  * process environment. A measurement that wants a different cut,
+  * cadence or tokenizer runs Bench or perfbench on two commits; it does
+  * not flip a property inside a query path. Both lists are exact, so a
+  * stale entry fails as loudly as a new offender. */
+class SourceAuditSpec extends AnyFunSuite {
+
+  private val mainRoot = Paths.get("src/main/scala")
+
+  private def sources(under: Path): Seq[Path] = {
+    val s = Files.walk(under)
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
+    finally s.close()
+  }
+
+  private def lines(p: Path): Seq[String] = Files.readAllLines(p).asScala.toSeq
+
+  test("src/main defines `def main` only in the four tool mains") {
+    assert(Files.isDirectory(mainRoot), s"run from the repo root (no $mainRoot)")
+    val Pkg = """^\s*package\s+([\w.]+)""".r.unanchored
+    val Obj = """^\s*(?:private\[\w+\]\s+)?object\s+(\w+)""".r.unanchored
+    val mains = sources(mainRoot).flatMap { p =>
+      val ls = lines(p)
+      val pkg = ls.collectFirst { case Pkg(n) => n }.getOrElse("")
+      ls.indices.filter(i => ls(i).contains("def main(")).map { i =>
+        val obj = ls.take(i).reverse.collectFirst { case Obj(n) => n }.getOrElse("?")
+        s"$pkg.$obj"
+      }
+    }.toSet
+    assert(mains == Set("graft.Bench", "graft.Verify", "graft.PlanDump", "graft.cdc.Main"))
+  }
+
+  test("operators and streaming read no system property or environment variable") {
+    val Read = """(sys\.props|sys\.env|System\.getProperty|System\.getenv)""".r
+    val Keyed = """(?:sys\.props|sys\.env|System\.getProperty|System\.getenv)(?:\.\w+)?\(\s*"([^"]*)"""".r
+    // Warehouse's standing-root default: the JVM temp dir and user name
+    val allowed = Set("Warehouse.scala" -> "java.io.tmpdir", "Warehouse.scala" -> "user.name")
+    val reads = Seq("graft/operators", "graft/streaming").flatMap { d =>
+      sources(mainRoot.resolve(d)).flatMap { p =>
+        lines(p).zipWithIndex.flatMap { case (l, i) =>
+          val keys = Keyed.findAllMatchIn(l).map(_.group(1)).toSeq
+          val unkeyed = Read.findAllMatchIn(l).size - keys.size
+          (keys ++ Seq.fill(unkeyed)("?")).map(k => (p.getFileName.toString, k, i + 1))
+        }
+      }
+    }
+    val offenders = reads.filterNot(r => allowed((r._1, r._2)))
+    assert(offenders.isEmpty, s"process-switch reads in query code: $offenders")
+    assert(reads.map(r => (r._1, r._2)).toSet == allowed, "stale allowlist entry")
+  }
+}

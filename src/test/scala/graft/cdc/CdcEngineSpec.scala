@@ -187,6 +187,26 @@ class CdcEngineSpec extends SparkSpecBase {
     assert(!t.isAlive, "cdc loop did not stop promptly after close()")
   }
 
+  test("continuous bootstrapAndCdc: snapshot, then a change appended after start; close() joins") {
+    val log = new ParquetChangeLog(newLogDir())
+    val rec = new RecordingHandler
+    val engine = new CdcEngine(spark, log, rec, maxBatchSize = 10)
+    val t = new Thread(() =>
+      engine.bootstrapAndCdc(Seq("nation" -> graft.Tables.nation(spark, sf))))
+    t.start()
+    appendRows(log, logRows(0 until 3, table = "nation")) // lands during or after the snapshot
+    val deadline = System.currentTimeMillis() + 30000
+    while (rec.all.size < 25 + 3 && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    val got = rec.all
+    assert(got.size == 25 + 3, "the continuous loop did not deliver the appended changes")
+    assert(got.take(25).forall(c => c.before.isEmpty && c.after.get.contains("n_name")))
+    assert(got.drop(25).map(_.after.get) == (0 until 3).map(i => s"""{"pk":$i}"""))
+    assert(log.committedOffset == 2)
+    engine.close()
+    t.join(10000) // bound: 10 s against the 100 ms poll interval
+    assert(!t.isAlive, "bootstrapAndCdc loop did not stop after close()")
+  }
+
   test("poll gate: close() from another thread unblocks await as a wake signal") {
     val g = Wakeup.poll()
     val woken = new java.util.concurrent.atomic.AtomicBoolean(false)
