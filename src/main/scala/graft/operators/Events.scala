@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Event-stream operators over the `events` table — the batch views of
   * what the streaming module runs continuously: tumbling-window
@@ -953,28 +954,6 @@ object Events {
       .orderBy(col("click_id"))
   }
 
-  /** e19: sequential pattern matching — the MATCH_RECOGNIZE class
-    * (ISO SQL:2016 row-pattern recognition, which Spark does not
-    * implement): per user, count GREEDY NON-OVERLAPPING completions of
-    * the ordered pattern click → view → purchase across the full event
-    * history, plus the stage the open (incomplete) match has reached.
-    * e6 asks "did the user EVER complete the funnel (windowed)"; this
-    * asks "how many times, sequentially" — the repeated-match
-    * semantics MATCH_RECOGNIZE's `PATTERN (A B C)+` family provides.
-    *
-    * The automaton is a FOLD with the state encoded in one integer:
-    * acc ≡ stage (mod 3), acc div 3 = completed count — and because
-    * the three stages cycle 0→1→2→0, EVERY accepted transition is
-    * literally `acc + 1` (a completion wraps the stage and carries
-    * into the count digit). Both engines state the identical integer
-    * fold (Catalyst `aggregate` lambda / DuckDB `list_reduce`), so the
-    * match count is hash-gated exactly.
-    *
-    * Scale shape: one shuffle to the user key, then a spill-capable
-    * within-partition sort and a streaming O(1)-state scan per user
-    * run (see [[patternCount]]) — task memory independent of any
-    * key's history length, so a hyperactive key (bot, replay loop)
-    * costs sort disk, never an OOM. */
   /** PAA geometry for e23: 8 segments, 3 neighbors, 5 query users. */
   val PaaSegs = 8
   val SeriesK = 3
@@ -1037,81 +1016,101 @@ object Events {
       .orderBy(col("qid"), col("rank"))
   }
 
+  /** e19: the k-cycle counter ([[patternCount]]) over the standard
+    * funnel — how many times each user completed it, sequentially. */
   def e19Pattern(s: SparkSession, d: String): DataFrame =
-    patternCount(events(s, d), Seq("click", "view", "purchase"))
+    patternCount(events(s, d), Funnel)
+      .select(col("user_id"), col("n_funnels"), col("open_stage"))
       .orderBy(col("user_id"))
 
-  /** Library form of [[e19Pattern]] over any (user_id, event_id,
-    * event_type, ts) frame and ANY ordered stage sequence: the k
-    * stages cycle 0→1→…→k−1→0 with acc%k = open stage and acc div k =
-    * completed count, so every accepted transition is `acc + 1`
-    * whatever the pattern — the generalized `PATTERN (S1 S2 … Sk)+`
-    * greedy counter. Stages must be distinct (the automaton keys its
-    * transition on the stage index a type maps to).
-    *
-    * Execution is the x9 shape, NOT a per-key collect_list: hash to
-    * the user key, sort within partitions on (user, t, id) — Spark's
-    * spill-capable external sort, so a hyperactive key (bot, replay
-    * loop) costs disk, never task memory — then stream each user's
-    * run once with O(1) carried state (the one-integer accumulator).
-    * This is the MATCH_RECOGNIZE partition contract with the per-key
-    * buffer removed: task memory is independent of the hottest key's
-    * history length (the fold-equivalence with the collect_list form
-    * is spec-pinned on adversarial orderings, and the hyperactive-key
-    * cost was measured by an earlier synthetic-scale probe). */
-  def patternCount(ev: DataFrame, stages: Seq[String]): DataFrame =
-    patternCountSets(ev, stages.map(Seq(_)))
+  /** The standard click → view → purchase funnel as stage sets. */
+  val Funnel: Seq[Seq[String]] = Seq(Seq("click"), Seq("view"), Seq("purchase"))
 
-  /** [[patternCount]] with ALTERNATION: stage i accepts any event type
-    * in its set (`PATTERN (A (B|C) D)`). The k-cycle integer automaton
-    * is unchanged — the stage code is simply many-to-one — so counts,
-    * open stage and the greedy non-overlap discipline carry over
-    * verbatim, and single-element sets degrade to [[patternCount]]
-    * exactly (spec-pinned). */
-  def patternCountSets(ev: DataFrame, stageSets: Seq[Seq[String]]): DataFrame = {
+  /** Sequential pattern matching — the MATCH_RECOGNIZE class (ISO
+    * SQL:2016 row-pattern recognition, which Spark does not implement)
+    * as the k-CYCLE automaton: per user, count GREEDY NON-OVERLAPPING
+    * completions of the ordered stages across the full event history,
+    * plus the stage the open (incomplete) match has reached — the
+    * `PATTERN (S1 S2 … Sk)+` repeated-match semantics. e6 asks "did the
+    * user EVER complete the funnel (windowed)"; this asks "how many
+    * times, sequentially". Stage i accepts ANY event type in its set —
+    * ALTERNATION, `PATTERN (A (B|C) D)` (e22) — and single-element sets
+    * are the plain stage list (spec-pinned); sets must be pairwise
+    * disjoint ([[patternPrepSets]]).
+    *
+    * The state is ONE integer: acc ≡ open stage (mod k), acc div k =
+    * completed count — the stages cycle 0→1→…→k−1→0, so EVERY accepted
+    * transition is literally `acc + 1` (a completion wraps the stage and
+    * carries into the count digit). Both engines state the identical
+    * integer fold (Catalyst `aggregate` lambda / DuckDB `list_reduce`),
+    * so the match count is hash-gated exactly.
+    *
+    * WITHIN (`PATTERN (...) WITHIN interval`, e21): an attempt EXPIRES
+    * if it cannot complete within `windowMicros` of the event that
+    * opened it, and the expiring event is then itself eligible to open
+    * a fresh attempt. Still greedy, non-overlapping, NO backtracking —
+    * the attempt after an expiry starts at the next stage-1 event.
+    * `n_expired` tallies the abandoned attempts, the funnel-health
+    * signal the unwindowed counter cannot see; at the default
+    * `Long.MaxValue` the expiry never fires.
+    *
+    * Execution is the x9 shape, NOT a per-key collect_list: hash to the
+    * user key, sort within partitions on (user, t, id) — Spark's
+    * spill-capable external sort — then stream each user's run once
+    * with O(1) carried state ([[scanUsers]]). This is the
+    * MATCH_RECOGNIZE partition contract with the per-key buffer
+    * removed: task memory is independent of the hottest key's history
+    * length, so a hyperactive key (bot, replay loop) costs sort disk,
+    * never an OOM (the fold-equivalence with the collect_list form is
+    * spec-pinned on adversarial orderings, and the hyperactive-key cost
+    * was measured by an earlier synthetic-scale probe). */
+  def patternCount(ev: DataFrame, stageSets: Seq[Seq[String]],
+      windowMicros: Long = Long.MaxValue): DataFrame = {
+    require(windowMicros > 0L, "window must be positive")
     val k = stageSets.size.toLong
-    patternPrepSets(ev, stageSets)
-      .mapPartitions { it =>
-        // partition order is (user, t, id); a user change resets the
-        // accumulator. One output row per user run, O(1) state.
-        val b = it.buffered
-        new Iterator[(Option[Long], Long)] {
-          def hasNext: Boolean = b.hasNext
-          def next(): (Option[Long], Long) = {
-            val u = b.head._1
-            var acc = 0L
-            while (b.hasNext && b.head._1 == u) {
-              val c = b.next()._4
-              if (c >= 1L && acc % k == c - 1L) acc += 1L
-            }
-            (u, acc)
-          }
-        }
-      }(org.apache.spark.sql.Encoders.product[(Option[Long], Long)])
-      .toDF("user_id", "st")
+    scanUsers(patternPrepSets(ev, stageSets), CycleState())(
+        cycleStep(k, windowMicros))(
+        (e, _, s, last) => if (last) Some((e._1, s.acc, s.n_expired)) else None)
+      .toDF("user_id", "st", "n_expired")
       .select(col("user_id"),
         call_function("div", col("st"), lit(k)).as("n_funnels"),
-        (col("st") % k).as("open_stage"))
+        (col("st") % k).as("open_stage"), col("n_expired"))
   }
 
-  /** The shared pattern-automaton input: per event (user_id, t, id,
-    * stage code 1..k or 0), hash-clustered on the user and sorted
-    * within partitions on (user, t, id) — full-precision micros, not
-    * seconds (a truncated key reorders same-second events vs the
-    * oracle), event_id breaking ts ties exactly like the collect_list
-    * form's struct sort. */
-  private def patternPrep(ev: DataFrame, stages: Seq[String]):
-      org.apache.spark.sql.Dataset[(Option[Long], Long, Long, Long)] =
-    patternPrepSets(ev, stages.map(Seq(_)))
+  /** k-cycle state: the accumulator, the open attempt's first accepted
+    * event (µs, event_id) and the expiry tally. */
+  case class CycleState(acc: Long = 0L, start_us: Long = 0L,
+      start_id: Long = 0L, n_expired: Long = 0L)
 
-  /** Stage-SET form of the automaton input (MATCH_RECOGNIZE
-    * alternation — `PATTERN (A (B|C) D)`): stage i is matched by ANY
-    * of its event types. Sets must be pairwise disjoint so the code
-    * is a function of the event alone (non-disjoint alternation would
-    * need automaton lookahead, which the single-pass greedy contract
-    * deliberately excludes). */
+  /** One k-cycle step on event (t µs, id, stage code c). The expiry
+    * check precedes the transition: the event that breaches the window
+    * may itself open a fresh attempt. */
+  private[graft] def cycleStep(k: Long, windowMicros: Long)(
+      s: CycleState, t: Long, id: Long, c: Long): CycleState = {
+    val open = s.acc % k
+    val e = if (open > 0L && t - s.start_us > windowMicros)
+      s.copy(acc = s.acc - open, n_expired = s.n_expired + 1L) else s
+    val stage = e.acc % k
+    if (c != stage + 1L) e
+    else if (stage == 0L) e.copy(acc = e.acc + 1L, start_us = t, start_id = id)
+    else e.copy(acc = e.acc + 1L)
+  }
+
+  /** A sorted automaton input row: (user_id, t µs, event_id, stage code
+    * 1..k, or 0 for an event no stage accepts). */
+  private type StageEvent = (Option[Long], Long, Long, Long)
+
+  /** The automaton input: per event (user_id, t, id, stage code),
+    * hash-clustered on the user and sorted within partitions on
+    * (user, t, id) — full-precision micros, not seconds (a truncated key
+    * reorders same-second events vs the oracle), event_id breaking ts
+    * ties exactly like the collect_list form's struct sort. Stage i is
+    * matched by ANY of its event types; sets must be pairwise disjoint
+    * so the code is a function of the event alone (non-disjoint
+    * alternation would need automaton lookahead, which the single-pass
+    * greedy contract deliberately excludes). */
   private def patternPrepSets(ev: DataFrame, stageSets: Seq[Seq[String]]):
-      org.apache.spark.sql.Dataset[(Option[Long], Long, Long, Long)] = {
+      org.apache.spark.sql.Dataset[StageEvent] = {
     val all = stageSets.flatten
     require(stageSets.nonEmpty && stageSets.forall(_.nonEmpty) &&
       all.distinct.size == all.size,
@@ -1121,63 +1120,60 @@ object Events {
     }
     ev.select(col("user_id"), unix_micros(col("ts")).as("t"),
         col("event_id").as("id"), code.as("c"))
-      .as[(Option[Long], Long, Long, Long)](
-        org.apache.spark.sql.Encoders.product[(Option[Long], Long, Long, Long)])
+      .as[StageEvent](org.apache.spark.sql.Encoders.product[StageEvent])
       .repartition(col("user_id"))
       .sortWithinPartitions(col("user_id"), col("t"), col("id"))
   }
 
-  /** Match SPANS from the same greedy automaton — the MATCH_RECOGNIZE
+  /** The one batch pattern scan: each user run of [[patternPrepSets]]'
+    * sorted stream is folded through `step` from `zero` — one carried
+    * state, the run is never buffered — and `emit` sees every event with
+    * the states before and after it and whether it ends its user's run.
+    * Counters emit their final state once per user; span emitters emit
+    * as the scan passes each completion. */
+  private def scanUsers[S, O <: Product : TypeTag](
+      sorted: org.apache.spark.sql.Dataset[StageEvent], zero: S)(
+      step: (S, Long, Long, Long) => S)(
+      emit: (StageEvent, S, S, Boolean) => Option[O]):
+      org.apache.spark.sql.Dataset[O] =
+    sorted.mapPartitions { it =>
+      val b = it.buffered
+      var s = zero
+      var first = true
+      b.flatMap { e =>
+        val prev = if (first) zero else s
+        s = step(prev, e._2, e._3, e._4)
+        first = !(b.hasNext && b.head._1 == e._1)
+        emit(e, prev, s, first)
+      }
+    }(org.apache.spark.sql.Encoders.product[O])
+
+  /** Match SPANS from the k-cycle automaton — the MATCH_RECOGNIZE
     * measures surface (`FIRST(A.id)` / `LAST(C.id)` per completed
     * match): for each completed cycle, one row (user_id, match_no,
     * start_event_id, end_event_id) where start is the event that took
     * the cycle's first accepted transition and end is the completing
     * event. Same execution contract as [[patternCount]]: sorted
-    * partition stream, O(1) carried state (accumulator + the open
-    * cycle's start id), spans EMITTED as the scan passes them — never
-    * buffered, so a hyperactive key streams its spans out instead of
-    * accumulating them. */
+    * partition stream, O(1) carried state, spans EMITTED as the scan
+    * passes them — never buffered, so a hyperactive key streams its
+    * spans out instead of accumulating them. */
   def patternMatches(ev: DataFrame, stages: Seq[String]): DataFrame = {
     val k = stages.size.toLong
-    patternPrep(ev, stages)
-      .mapPartitions { it =>
-        val b = it.buffered
-        new Iterator[(Option[Long], Long, Long, Long)] {
-          private var curU: Option[Long] = None
-          private var started = false
-          private var acc = 0L
-          private var curStart = 0L
-          private var out: (Option[Long], Long, Long, Long) = _
-          private def advance(): Unit = {
-            out = null
-            while (out == null && b.hasNext) {
-              val (u, _, id, c) = b.next()
-              if (!started || u != curU) {
-                curU = u; started = true; acc = 0L; curStart = 0L
-              }
-              if (c >= 1L && acc % k == c - 1L) {
-                if (c == 1L) curStart = id
-                acc += 1L
-                if (acc % k == 0L) out = (u, acc / k, curStart, id)
-              }
-            }
-          }
-          advance()
-          def hasNext: Boolean = out != null
-          def next(): (Option[Long], Long, Long, Long) = {
-            val r = out; advance(); r
-          }
-        }
-      }(org.apache.spark.sql.Encoders.product[(Option[Long], Long, Long, Long)])
+    scanUsers(patternPrepSets(ev, stages.map(Seq(_))), CycleState())(
+        cycleStep(k, Long.MaxValue))(
+        (e, p, s, _) =>
+          if (s.acc > p.acc && s.acc % k == 0L)
+            Some((e._1, s.acc / k, s.start_id, e._3))
+          else None)
       .toDF("user_id", "match_no", "start_event_id", "end_event_id")
   }
 
   /** OVERLAPPING matches — MATCH_RECOGNIZE `AFTER MATCH SKIP TO NEXT
-    * ROW`, the OTHER standard skip mode (every row of the family so
-    * far runs `SKIP PAST LAST ROW`, the greedy non-overlap
-    * discipline): every stage-1 event that can complete the funnel
-    * yields its own match, and matches share suffix events freely
-    * (two clicks before one view/purchase both match through it).
+    * ROW`, the OTHER standard skip mode (every automaton above runs
+    * `SKIP PAST LAST ROW`, the greedy non-overlap discipline): every
+    * stage-1 event that can complete the funnel yields its own match,
+    * and matches share suffix events freely (two clicks before one
+    * view/purchase both match through it).
     *
     * The semantics make the scalable plan DIFFERENT in kind from the
     * automaton family: because each stage greedily takes the EARLIEST
@@ -1193,11 +1189,25 @@ object Events {
     * all-clicks stream; the chain form is O(1) per row by
     * construction and every operator is mergeable/spillable.
     *
-    * Output: one row per completed overlapping match
-    * (user_id, start/mid/end event ids), deterministic by the
+    * WITHIN (e34): a stage-1 event's match counts only if its chained
+    * completion lands within `windowMicros` of it. The chain stays
+    * GREEDY and non-backtracking (a match whose earliest completion
+    * misses the deadline is dropped, never retried against a later
+    * view — e21's discipline): the stage-3 pointer also carries its t
+    * and the deadline is one filter on the joined chain. The WITHIN
+    * bound is also what makes a STREAMING twin of overlap matching
+    * possible at all — pending attempts expire after the window, so
+    * keyed state is bounded by window × event rate instead of
+    * O(partition); the unbounded default has no twin for exactly the
+    * reason above.
+    *
+    * Output: one row per completed overlapping match (user_id,
+    * start/mid/end event ids, span_us), deterministic by the
     * (ts, event_id) total order both engines state. */
-  def patternOverlap(ev: DataFrame, stages: Seq[String]): DataFrame = {
+  def patternOverlap(ev: DataFrame, stages: Seq[String],
+      windowMicros: Long = Long.MaxValue): DataFrame = {
     require(stages.size == 3, "patternOverlap states the 3-stage funnel")
+    require(windowMicros > 0L, "window must be positive")
     val code = stages.zipWithIndex.foldLeft(lit(0L)) { case (c, (st, i)) =>
       when(col("event_type") === st, (i + 1).toLong).otherwise(c)
     }
@@ -1211,16 +1221,23 @@ object Events {
         ignoreNulls = true).over(w))
       .withColumn("nx3", first(when(col("c") === 3L, col("id")),
         ignoreNulls = true).over(w))
+      .withColumn("nx3_t", first(when(col("c") === 3L, col("t")),
+        ignoreNulls = true).over(w))
     val starts = base.filter(col("c") === 1L && col("nx2").isNotNull)
-      .select(col("user_id").as("u"), col("id").as("start_event_id"),
-        col("nx2").as("mid_event_id"))
+      .select(col("user_id").as("u"), col("t").as("start_t"),
+        col("id").as("start_event_id"), col("nx2").as("mid_event_id"))
     val mids = base.filter(col("c") === 2L && col("nx3").isNotNull)
       .select(col("user_id").as("mu"), col("id").as("mid"),
-        col("nx3").as("end_event_id"))
-    starts.join(mids,
-        col("u") <=> col("mu") && col("mid_event_id") === col("mid"))
+        col("nx3_t").as("end_t"), col("nx3").as("end_event_id"))
+    val chained = starts.join(mids,
+      col("u") <=> col("mu") && col("mid_event_id") === col("mid"))
+    // no deadline filters nothing; leaving the filter out lets a caller
+    // that drops span_us prune the completion-time pointer entirely
+    (if (windowMicros == Long.MaxValue) chained
+     else chained.filter(col("end_t") - col("start_t") <= windowMicros))
       .select(col("u").as("user_id"), col("start_event_id"),
-        col("mid_event_id"), col("end_event_id"))
+        col("mid_event_id"), col("end_event_id"),
+        (col("end_t") - col("start_t")).as("span_us"))
   }
 
   /** e32: the overlapping-match surface over the standard
@@ -1231,58 +1248,14 @@ object Events {
     * spec-pinned). */
   def e32PatternOverlap(s: SparkSession, d: String): DataFrame =
     patternOverlap(events(s, d), Seq("click", "view", "purchase"))
+      .drop("span_us")
       .orderBy(col("user_id"), col("start_event_id"))
-
-  /** e34: OVERLAPPING matches bounded by `WITHIN` — e32's
-    * suffix-shared chain with the e21 deadline composed in: a
-    * stage-1 event's match counts only if its chained completion
-    * lands within `windowMicros` of it. The chain stays GREEDY and
-    * non-backtracking (each stage takes the earliest next occurrence;
-    * a match whose earliest completion misses the deadline is dropped,
-    * never retried against a later view — e21's discipline): the
-    * next-pointers simply carry (t, id) structs instead of ids, and
-    * the deadline is one filter on the joined chain. The WITHIN bound
-    * is also what makes a STREAMING twin of overlap matching possible
-    * at all — pending attempts expire after the window, so keyed
-    * state is bounded by window × event rate instead of O(partition)
-    * (the unbounded e32 has no twin for exactly that reason, its
-    * scaladoc's argument). */
-  def patternOverlapWithin(ev: DataFrame, stages: Seq[String],
-      windowMicros: Long): DataFrame = {
-    require(stages.size == 3, "patternOverlapWithin states the 3-stage funnel")
-    require(windowMicros > 0L, "window must be positive")
-    val code = stages.zipWithIndex.foldLeft(lit(0L)) { case (c, (st, i)) =>
-      when(col("event_type") === st, (i + 1).toLong).otherwise(c)
-    }
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("t"), col("id"))
-      .rowsBetween(1L, Window.unboundedFollowing)
-    val base = ev
-      .select(col("user_id"), unix_micros(col("ts")).as("t"),
-        col("event_id").as("id"), code.as("c"))
-      .withColumn("nx2", first(when(col("c") === 2L,
-        struct(col("t"), col("id"))), ignoreNulls = true).over(w))
-      .withColumn("nx3", first(when(col("c") === 3L,
-        struct(col("t"), col("id"))), ignoreNulls = true).over(w))
-    val starts = base.filter(col("c") === 1L && col("nx2").isNotNull)
-      .select(col("user_id").as("u"), col("t").as("start_t"),
-        col("id").as("start_event_id"), col("nx2.id").as("mid_event_id"))
-    val mids = base.filter(col("c") === 2L && col("nx3").isNotNull)
-      .select(col("user_id").as("mu"), col("id").as("mid"),
-        col("nx3.t").as("end_t"), col("nx3.id").as("end_event_id"))
-    starts.join(mids,
-        col("u") <=> col("mu") && col("mid_event_id") === col("mid"))
-      .filter(col("end_t") - col("start_t") <= windowMicros)
-      .select(col("u").as("user_id"), col("start_event_id"),
-        col("mid_event_id"), col("end_event_id"),
-        (col("end_t") - col("start_t")).as("span_us"))
-  }
 
   /** e34's gated surface: the standard funnel under the e21 7-day
     * window (at sf0.01 the deadline is ARMED: it drops real e32
     * matches — spec-pinned subset relation). */
   def e34OverlapWithin(s: SparkSession, d: String): DataFrame =
-    patternOverlapWithin(events(s, d), Seq("click", "view", "purchase"),
+    patternOverlap(events(s, d), Seq("click", "view", "purchase"),
       PatternWithinMicros)
       .orderBy(col("user_id"), col("start_event_id"))
 
@@ -1290,64 +1263,12 @@ object Events {
     * days of its first accepted event (MATCH_RECOGNIZE `WITHIN`). */
   val PatternWithinMicros: Long = 7L * 86400L * 1000000L
 
-  /** Pattern counting with a WITHIN window — ISO MATCH_RECOGNIZE's
-    * `PATTERN (...) WITHIN interval` clause: a match attempt EXPIRES
-    * if it cannot complete within `windowMicros` of the event that
-    * opened it; the expiring event is then itself eligible to open a
-    * fresh attempt. Greedy, non-overlapping, NO backtracking — the
-    * attempt after an expiry starts at the next stage-1 event, the
-    * same deterministic single-pass discipline as [[patternCount]]
-    * (both engines state the identical fold, so counts, open stage
-    * AND the expiry tally are hash-gated). Output adds `n_expired` —
-    * the abandoned-attempt count, the funnel-health signal the
-    * unwindowed counter cannot see.
-    *
-    * Execution: [[patternCount]]'s streamed scan with two more longs
-    * of state (attempt start ts, expiry count) — still O(1) per key. */
-  def patternCountWithin(ev: DataFrame, stages: Seq[String],
-      windowMicros: Long): DataFrame = {
-    require(windowMicros > 0L, "window must be positive")
-    val k = stages.size.toLong
-    patternPrep(ev, stages)
-      .mapPartitions { it =>
-        val b = it.buffered
-        new Iterator[(Option[Long], Long, Long)] {
-          def hasNext: Boolean = b.hasNext
-          def next(): (Option[Long], Long, Long) = {
-            val u = b.head._1
-            var acc = 0L
-            var start = 0L
-            var nexp = 0L
-            while (b.hasNext && b.head._1 == u) {
-              val (_, t, _, c) = b.next()
-              var s = acc % k
-              // expiry check precedes the transition: the event that
-              // breaches the window may itself open a fresh attempt
-              if (s > 0L && t - start > windowMicros) {
-                acc -= s; s = 0L; nexp += 1L
-              }
-              if (c == s + 1L) {
-                if (s == 0L) start = t
-                acc += 1L
-              }
-            }
-            (u, acc, nexp)
-          }
-        }
-      }(org.apache.spark.sql.Encoders.product[(Option[Long], Long, Long)])
-      .toDF("user_id", "st", "n_expired")
-      .select(col("user_id"),
-        call_function("div", col("st"), lit(k)).as("n_funnels"),
-        (col("st") % k).as("open_stage"), col("n_expired"))
-  }
-
   /** e21: e19's funnel counter under a 7-day WITHIN window — how many
     * funnels complete fast enough to count, and how many attempts are
     * abandoned (expired). On this corpus: a real mix (at sf0.01, 551
     * windowed vs 616 unwindowed completions, 113 expiries). */
   def e21PatternWithin(s: SparkSession, d: String): DataFrame =
-    patternCountWithin(events(s, d), Seq("click", "view", "purchase"),
-      PatternWithinMicros)
+    patternCount(events(s, d), Funnel, PatternWithinMicros)
       .orderBy(col("user_id"))
 
   /** e22: alternation funnel — click → (view | error) → purchase: the
@@ -1355,8 +1276,9 @@ object Events {
     * step. MATCH_RECOGNIZE `PATTERN (A (B|C) D)` under the same
     * greedy single-pass contract as e19. */
   def e22PatternAlt(s: SparkSession, d: String): DataFrame =
-    patternCountSets(events(s, d),
+    patternCount(events(s, d),
       Seq(Seq("click"), Seq("view", "error"), Seq("purchase")))
+      .select(col("user_id"), col("n_funnels"), col("open_stage"))
       .orderBy(col("user_id"))
 
   /** e25: the OPTIONAL-stage quantifier — `PATTERN (A B? C)` as
@@ -1365,147 +1287,136 @@ object Events {
     * view in between is consumed when present. Greedy,
     * non-overlapping, single-pass like the rest of the family, but
     * the cycle trick no longer applies (two accepting paths), so the
-    * fold runs the explicit 3-state automaton: 0 idle →(A) 1 →(B) 2;
-    * states 1 AND 2 complete on C. Output counts completions, HOW
-    * MANY used the optional stage (the MATCH_RECOGNIZE measure
-    * distinguishing the paths), and the open state. Same streamed
-    * O(1)-state execution contract as e19/e21. */
+    * fold runs the explicit 3-state automaton ([[optionalStep]]).
+    * Output counts completions, HOW MANY used the optional stage (the
+    * MATCH_RECOGNIZE measure distinguishing the paths), and the open
+    * state. Same streamed O(1)-state execution contract as e19/e21. */
   def patternCountOptional(ev: DataFrame, a: String, b: String,
       c: String): DataFrame = {
     require(Seq(a, b, c).distinct.size == 3, "stages must be distinct")
-    patternPrepSets(ev, Seq(Seq(a), Seq(b), Seq(c)))
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(Option[Long], Long, Long, Long)] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): (Option[Long], Long, Long, Long) = {
-            val u = buf.head._1
-            var st = 0L; var done = 0L; var withB = 0L
-            while (buf.hasNext && buf.head._1 == u) {
-              val code = buf.next()._4
-              if (st == 0L) { if (code == 1L) st = 1L }
-              else if (st == 1L) {
-                if (code == 2L) st = 2L
-                else if (code == 3L) { done += 1L; st = 0L }
-              } else { // st == 2
-                if (code == 3L) { done += 1L; withB += 1L; st = 0L }
-              }
-            }
-            (u, done, withB, st)
-          }
-        }
-      }(org.apache.spark.sql.Encoders.product[(Option[Long], Long, Long, Long)])
+    scanUsers(patternPrepSets(ev, Seq(Seq(a), Seq(b), Seq(c))),
+        OptionalState())(optionalStep)(
+        (e, _, s, last) =>
+          if (last) Some((e._1, s.n_complete, s.n_with_b, s.open_state))
+          else None)
       .toDF("user_id", "n_complete", "n_with_b", "open_state")
   }
+
+  /** Optional-stage state: 0 idle, 1 after A, 2 after A B; and the
+    * completion tallies. */
+  case class OptionalState(open_state: Long = 0L, n_complete: Long = 0L,
+      n_with_b: Long = 0L)
+
+  /** 0 idle →(A) 1 →(B) 2; states 1 AND 2 complete on C. A second B in
+    * state 2 is inert — the reading `B{0,1}` would reject, which is why
+    * this is its own automaton and not a counted repeat. */
+  private def optionalStep(s: OptionalState, t: Long, id: Long,
+      c: Long): OptionalState =
+    if (s.open_state == 0L) { if (c == 1L) s.copy(open_state = 1L) else s }
+    else if (s.open_state == 1L && c == 2L) s.copy(open_state = 2L)
+    else if (c == 3L) OptionalState(0L, s.n_complete + 1L,
+      if (s.open_state == 2L) s.n_with_b + 1L else s.n_with_b)
+    else s
 
   /** e25 over the corpus: click → view? → purchase. */
   def e25PatternOptional(s: SparkSession, d: String): DataFrame =
     patternCountOptional(events(s, d), "click", "view", "purchase")
       .orderBy(col("user_id"))
 
-  /** e27: the COUNTED-REPEAT quantifier — `PATTERN (A B{minB,} C)`:
-    * a completion needs at least `minB` B-events between the A and
-    * the C. The e25 transition-table form generalizes with ONE more
-    * state integer (the open attempt's B count): 0 idle →(A) 1
-    * counting; in state 1 every B increments the count and a C either
-    * completes (count ≥ minB) or fails the attempt — both reset to
-    * idle, C consumed either way (greedy, no lookahead, non-
-    * overlapping, repeated A ignored mid-attempt: the family's
-    * single-pass contract). Measures: completions, total Bs consumed
-    * by completed matches (the `B{2,}` run-length measure), the open
-    * state and the open attempt's B count. Same streamed O(1)-state
-    * execution as e19/e21/e25 — the B count is an integer, never a
-    * buffer, so `B{2,}` over a million-view bot key carries 8 bytes
-    * of state. */
+  /** The COUNTED-REPEAT quantifier — `PATTERN (A B{minB,maxB} C)
+    * WITHIN w`: a completion needs between `minB` and `maxB` B-events
+    * (inclusive) between the A and the C. The e25 transition-table form
+    * generalizes with ONE more state integer (the open attempt's B
+    * count): 0 idle →(A) 1 counting; in state 1 every B increments the
+    * count and a C either completes (count ≥ minB) or fails the
+    * attempt — both reset to idle, C consumed either way (greedy, no
+    * lookahead, non-overlapping, repeated A ignored mid-attempt: the
+    * family's single-pass contract).
+    *
+    * The (maxB+1)-th B OVERFLOWS the attempt: with no lookahead it can
+    * no longer match, so it fails to idle on the spot (the overflowing
+    * B is consumed; B is not A, so nothing re-opens) and the kill is
+    * tallied in `n_overflow`; a C then completes only from a live
+    * attempt, where the count is ≤ maxB by construction, so the
+    * completion check stays `count >= minB`. Under a deadline the open
+    * attempt carries its start time and an event arriving past the
+    * window EXPIRES the attempt first (e21's discipline — the breaching
+    * event may itself open a fresh attempt, tallied in `n_expired`);
+    * the counted-repeat rule then applies verbatim. The defaults leave
+    * both unarmed (e27); e31 arms the cap, e30 the window.
+    *
+    * Measures: completions, total Bs consumed by completed matches (the
+    * `B{2,}` run-length measure), the overflow and expiry tallies, the
+    * open state and the open attempt's B count. The B count is an
+    * integer, never a buffer, so `B{2,}` over a million-view bot key
+    * carries 8 bytes of state — the same streamed O(1)-state execution
+    * as the whole family. */
   def patternCountRepeat(ev: DataFrame, a: String, b: String, c: String,
-      minB: Int): DataFrame = {
+      minB: Int, maxB: Int = Int.MaxValue,
+      windowMicros: Long = Long.MaxValue): DataFrame = {
     require(Seq(a, b, c).distinct.size == 3, "stages must be distinct")
-    require(minB >= 1, s"minB must be >= 1, got $minB")
-    patternPrepSets(ev, Seq(Seq(a), Seq(b), Seq(c)))
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(Option[Long], Long, Long, Long, Long)] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): (Option[Long], Long, Long, Long, Long) = {
-            val u = buf.head._1
-            var st = 0L; var bc = 0L; var done = 0L; var sumB = 0L
-            while (buf.hasNext && buf.head._1 == u) {
-              val code = buf.next()._4
-              if (st == 0L) { if (code == 1L) { st = 1L; bc = 0L } }
-              else { // st == 1: counting Bs
-                if (code == 2L) bc += 1L
-                else if (code == 3L) {
-                  if (bc >= minB) { done += 1L; sumB += bc }
-                  st = 0L; bc = 0L
-                }
-              }
-            }
-            (u, done, sumB, st, bc)
-          }
-        }
-      }(org.apache.spark.sql.Encoders
-        .product[(Option[Long], Long, Long, Long, Long)])
-      .toDF("user_id", "n_complete", "sum_b", "open_state", "open_b")
+    require(minB >= 1 && maxB >= minB && windowMicros > 0L,
+      s"need 1 <= minB <= maxB and a positive window, got {$minB,$maxB}")
+    scanUsers(patternPrepSets(ev, Seq(Seq(a), Seq(b), Seq(c))),
+        RepeatState())(repeatStep(minB, maxB, windowMicros))(
+        (e, _, s, last) =>
+          if (last) Some((e._1, s.n_complete, s.sum_b, s.n_overflow,
+            s.n_expired, s.open_state, s.open_b))
+          else None)
+      .toDF("user_id", "n_complete", "sum_b", "n_overflow", "n_expired",
+        "open_state", "open_b")
+  }
+
+  /** Counted-repeat state: stage (0 idle, 1 counting), the open
+    * attempt's B count and start µs, and the tallies. */
+  case class RepeatState(open_state: Long = 0L, open_b: Long = 0L,
+      t0_us: Long = 0L, n_complete: Long = 0L, sum_b: Long = 0L,
+      n_overflow: Long = 0L, n_expired: Long = 0L)
+
+  /** One counted-repeat step: expiry first, then the transition with
+    * the overflow check. */
+  private[graft] def repeatStep(minB: Int, maxB: Int, windowMicros: Long)(
+      s: RepeatState, t: Long, id: Long, c: Long): RepeatState = {
+    val e = if (s.open_state == 1L && t - s.t0_us > windowMicros)
+      s.copy(open_state = 0L, open_b = 0L, n_expired = s.n_expired + 1L)
+    else s
+    if (e.open_state == 0L) {
+      if (c == 1L) e.copy(open_state = 1L, open_b = 0L, t0_us = t) else e
+    } else if (c == 2L) {
+      if (e.open_b >= maxB)
+        e.copy(open_state = 0L, open_b = 0L, n_overflow = e.n_overflow + 1L)
+      else e.copy(open_b = e.open_b + 1L)
+    } else if (c == 3L) {
+      val hit = e.open_b >= minB
+      e.copy(open_state = 0L, open_b = 0L,
+        n_complete = e.n_complete + (if (hit) 1L else 0L),
+        sum_b = e.sum_b + (if (hit) e.open_b else 0L))
+    } else e
   }
 
   /** e27 over the corpus: click → view{2,} → purchase. */
   def e27PatternRepeat(s: SparkSession, d: String): DataFrame =
     patternCountRepeat(events(s, d), "click", "view", "purchase", minB = 2)
+      .select(col("user_id"), col("n_complete"), col("sum_b"),
+        col("open_state"), col("open_b"))
       .orderBy(col("user_id"))
-
-  /** e31: the BOUNDED counted-repeat quantifier —
-    * `PATTERN (A B{minB,maxB} C)`: a completion needs between `minB`
-    * and `maxB` B-events (inclusive) between the A and the C. The e27
-    * automaton gains ONE comparison: in the counting state the
-    * (maxB+1)-th B OVERFLOWS the attempt — greedy with no lookahead,
-    * the attempt can no longer match, so it fails to idle on the spot
-    * (the overflowing B is consumed; B is not A, so nothing re-opens)
-    * and the kill is tallied in `n_overflow`. A C then completes only
-    * from a live attempt, where `bc` is ≤ maxB by construction, so the
-    * completion check stays `bc >= minB`. Non-overlapping, repeated A
-    * ignored mid-attempt, C consumed either way — the family's
-    * single-pass contract, still O(1) state (the same count integer,
-    * one more comparison — the VERDICT r10 #5 observation verbatim). */
-  def patternCountRepeatBounded(ev: DataFrame, a: String, b: String,
-      c: String, minB: Int, maxB: Int): DataFrame = {
-    require(Seq(a, b, c).distinct.size == 3, "stages must be distinct")
-    require(minB >= 1 && maxB >= minB,
-      s"need 1 <= minB <= maxB, got {$minB,$maxB}")
-    patternPrepSets(ev, Seq(Seq(a), Seq(b), Seq(c)))
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(Option[Long], Long, Long, Long, Long, Long)] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): (Option[Long], Long, Long, Long, Long, Long) = {
-            val u = buf.head._1
-            var st = 0L; var bc = 0L
-            var done = 0L; var sumB = 0L; var over = 0L
-            while (buf.hasNext && buf.head._1 == u) {
-              val code = buf.next()._4
-              if (st == 0L) { if (code == 1L) { st = 1L; bc = 0L } }
-              else { // st == 1: counting Bs under the cap
-                if (code == 2L) {
-                  bc += 1L
-                  if (bc > maxB) { over += 1L; st = 0L; bc = 0L }
-                } else if (code == 3L) {
-                  if (bc >= minB) { done += 1L; sumB += bc }
-                  st = 0L; bc = 0L
-                }
-              }
-            }
-            (u, done, sumB, over, st, bc)
-          }
-        }
-      }(org.apache.spark.sql.Encoders
-        .product[(Option[Long], Long, Long, Long, Long, Long)])
-      .toDF("user_id", "n_complete", "sum_b", "n_overflow",
-        "open_state", "open_b")
-  }
 
   /** e31 over the corpus: click → view{2,4} → purchase. */
   def e31PatternRepeatBounded(s: SparkSession, d: String): DataFrame =
-    patternCountRepeatBounded(events(s, d), "click", "view", "purchase",
+    patternCountRepeat(events(s, d), "click", "view", "purchase",
       minB = 2, maxB = 4)
+      .select(col("user_id"), col("n_complete"), col("sum_b"),
+        col("n_overflow"), col("open_state"), col("open_b"))
+      .orderBy(col("user_id"))
+
+  /** e30 over the corpus: click → view{2,} → purchase within 7 days —
+    * the e27×e21 composition that proves the quantifier family
+    * composes. */
+  def e30PatternRepeatWithin(s: SparkSession, d: String): DataFrame =
+    patternCountRepeat(events(s, d), "click", "view", "purchase",
+      minB = 2, windowMicros = PatternWithinMicros)
+      .select(col("user_id"), col("n_complete"), col("sum_b"),
+        col("n_expired"), col("open_state"), col("open_b"))
       .orderBy(col("user_id"))
 
   /** e28: the PERMUTE quantifier — `PATTERN (PERMUTE(S1 … Sk))`: a
@@ -1525,86 +1436,30 @@ object Events {
     val k = stages.size
     require(stages.distinct.size == k, "stages must be distinct")
     require(k >= 2 && k <= 62, s"permute arity must be in [2, 62], got $k")
-    val full = (1L << k) - 1L
-    patternPrepSets(ev, stages.map(Seq(_)))
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(Option[Long], Long, Long)] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): (Option[Long], Long, Long) = {
-            val u = buf.head._1
-            var mask = 0L; var done = 0L
-            while (buf.hasNext && buf.head._1 == u) {
-              val c = buf.next()._4
-              if (c >= 1L) {
-                val bit = 1L << (c - 1L).toInt
-                mask = if ((mask & bit) != 0L) bit else mask | bit
-                if (mask == full) { done += 1L; mask = 0L }
-              }
-            }
-            (u, done, mask)
-          }
-        }
-      }(org.apache.spark.sql.Encoders.product[(Option[Long], Long, Long)])
+    scanUsers(patternPrepSets(ev, stages.map(Seq(_))), PermuteState())(
+        permuteStep(k))(
+        (e, _, s, last) =>
+          if (last) Some((e._1, s.n_complete, s.open_mask)) else None)
       .toDF("user_id", "n_complete", "open_mask")
   }
+
+  /** PERMUTE state: the open attempt's stage mask and the completions. */
+  case class PermuteState(open_mask: Long = 0L, n_complete: Long = 0L)
+
+  private[graft] def permuteStep(k: Int)(s: PermuteState, t: Long, id: Long,
+      c: Long): PermuteState =
+    if (c < 1L) s
+    else {
+      val bit = 1L << (c - 1L).toInt
+      val m = if ((s.open_mask & bit) != 0L) bit else s.open_mask | bit
+      if (m == (1L << k) - 1L) PermuteState(0L, s.n_complete + 1L)
+      else s.copy(open_mask = m)
+    }
 
   /** e28 over the corpus: one click, one view, one purchase in any
     * order. */
   def e28PatternPermute(s: SparkSession, d: String): DataFrame =
     patternCountPermute(events(s, d), Seq("click", "view", "purchase"))
-      .orderBy(col("user_id"))
-
-  /** e30: counted repeat UNDER a deadline — `PATTERN (A B{minB,} C)
-    * WITHIN w`, the e27×e21 composition that proves the quantifier
-    * family composes: the open attempt carries its start time, an
-    * event arriving past the window EXPIRES the attempt first (e21's
-    * discipline — the breaching event may itself open a fresh
-    * attempt), and the counted-repeat rule then applies verbatim.
-    * State: four longs (stage, B count, start ts, —) plus the three
-    * tallies; same streamed O(1)-state contract as the whole family. */
-  def patternCountRepeatWithin(ev: DataFrame, a: String, b: String,
-      c: String, minB: Int, windowMicros: Long): DataFrame = {
-    require(Seq(a, b, c).distinct.size == 3, "stages must be distinct")
-    require(minB >= 1 && windowMicros > 0L, "need minB >= 1, window > 0")
-    patternPrepSets(ev, Seq(Seq(a), Seq(b), Seq(c)))
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(Option[Long], Long, Long, Long, Long, Long)] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): (Option[Long], Long, Long, Long, Long, Long) = {
-            val u = buf.head._1
-            var st = 0L; var bc = 0L; var t0 = 0L
-            var done = 0L; var sumB = 0L; var nexp = 0L
-            while (buf.hasNext && buf.head._1 == u) {
-              val (_, t, _, code) = buf.next()
-              // expiry precedes the transition (e21's rule)
-              if (st == 1L && t - t0 > windowMicros) {
-                nexp += 1L; st = 0L; bc = 0L
-              }
-              if (st == 0L) {
-                if (code == 1L) { st = 1L; bc = 0L; t0 = t }
-              } else {
-                if (code == 2L) bc += 1L
-                else if (code == 3L) {
-                  if (bc >= minB) { done += 1L; sumB += bc }
-                  st = 0L; bc = 0L
-                }
-              }
-            }
-            (u, done, sumB, nexp, st, bc)
-          }
-        }
-      }(org.apache.spark.sql.Encoders
-        .product[(Option[Long], Long, Long, Long, Long, Long)])
-      .toDF("user_id", "n_complete", "sum_b", "n_expired",
-        "open_state", "open_b")
-  }
-
-  /** e30 over the corpus: click → view{2,} → purchase within 7 days. */
-  def e30PatternRepeatWithin(s: SparkSession, d: String): DataFrame =
-    patternCountRepeatWithin(events(s, d), "click", "view", "purchase",
-      minB = 2, windowMicros = PatternWithinMicros)
       .orderBy(col("user_id"))
 
   /** e29: VALUE-RANGE window frame — the window capability q15's

@@ -1,10 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import scala.reflect.runtime.universe.TypeTag
+
 import graft.cdc.Change
+import graft.operators.Events
 
 /** Streaming operators over the change stream and event streams — the
   * continuous twins of the batch views in [[graft.operators.Events]].
@@ -129,9 +132,73 @@ object StreamOps {
 
   /** Input/state/output records for [[latestState]]. */
   case class KeyedEvent(user_id: Long, event_id: Long, event_type: String,
-      ts: java.sql.Timestamp)
+      ts: java.sql.Timestamp) extends EventTime
   case class LatestState(user_id: Long, last_event_id: Long,
       last_event_type: String, last_s: Long)
+
+  /** An event with an event time — what [[eventTimeFold]] orders and
+    * fences on. */
+  trait EventTime {
+    def ts: java.sql.Timestamp
+    def event_id: Long
+  }
+
+  /** Event time in µs — the batch queries' `unix_micros`. Millis are not
+    * enough: the corpus ships µs precision, so a millis key would fold
+    * same-millisecond siblings out of batch order, and a millis fence
+    * would drop the later one as stale when they arrive in separate
+    * micro-batches. */
+  private[graft] def micros(t: java.sql.Timestamp): Long =
+    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+
+  /** Keyed state of [[eventTimeFold]]: a twin's own state `st` plus the
+    * fence — `n_seen`, the fresh events folded so far (monotone, so it
+    * orders a twin's emissions), and the newest folded (µs, event_id). */
+  case class Fenced[S](st: S, n_seen: Long, last_us: Long,
+      last_event_id: Long)
+
+  /** The one keyed-state fold every event-time twin runs on. Delivery is
+    * ordered and at-least-once: each micro-batch of a key is sorted by
+    * (µs, event_id) — the batch twin's order — and an event at or before
+    * the newest folded one (late arrival, duplicate redelivery) is
+    * DROPPED rather than folded out of order. In-order replay therefore
+    * reproduces the batch query and redelivery cannot move the state.
+    * `step` folds one fresh event, given its µs and its `n_seen`, and
+    * returns the rows it emits; `finish` emits once the batch is
+    * folded. */
+  private def eventTimeFold[E <: EventTime, K, S: TypeTag, O](
+      events: Dataset[E])(key: E => K, keyEnc: Encoder[K], zero: S,
+      outEnc: Encoder[O])(
+      step: (K, S, E, Long, Long) => (S, Seq[O]),
+      finish: (K, S, Long) => Seq[O] = (_: K, _: S, _: Long) => Nil):
+      Dataset[O] = {
+    implicit val ke: Encoder[K] = keyEnc
+    implicit val oe: Encoder[O] = outEnc
+    implicit val se: Encoder[Fenced[S]] = Encoders.product[Fenced[S]]
+    events.groupByKey(key)
+      .flatMapGroupsWithState[Fenced[S], O](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
+        (k: K, batch: Iterator[E], state: GroupState[Fenced[S]]) =>
+          var f = state.getOption
+            .getOrElse(Fenced(zero, 0L, Long.MinValue, Long.MinValue))
+          val out = Seq.newBuilder[O]
+          batch.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
+            val t = micros(e.ts)
+            if (t > f.last_us || (t == f.last_us && e.event_id > f.last_event_id)) {
+              val (s, rows) = step(k, f.st, e, t, f.n_seen + 1L)
+              f = Fenced(s, f.n_seen + 1L, t, e.event_id)
+              out ++= rows
+            }
+          }
+          state.update(f)
+          (out ++= finish(k, f.st, f.n_seen)).result().iterator
+      }
+  }
+
+  /** Stage code of an event on the standard funnel
+    * ([[graft.operators.Events.Funnel]]): 1..3, or 0 off the funnel. */
+  private def funnelCode(tpe: String): Long =
+    Events.Funnel.indexWhere(_.contains(tpe)) + 1L
 
   /** Latest state per key as explicit keyed state (streaming e5 — the
     * CDC "current state" materialization, SURVEY.md §2.5):
@@ -183,7 +250,7 @@ object StreamOps {
         (user: Long, batch: Iterator[KeyedEvent], state: GroupState[FunnelState]) =>
           var st = state.getOption.getOrElse(FunnelState(0L, 0L, 0L))
           val out = scala.collection.mutable.ArrayBuffer.empty[StageReached]
-          batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
+          batch.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
             val ts = e.ts.getTime / 1000L
             e.event_type match {
               case "click" if st.t1 == 0L =>
@@ -2005,62 +2072,29 @@ object StreamOps {
       .limit(k)
   }
 
-  /** State/output of [[patternStream]]: the automaton accumulator
-    * (acc%3 = open stage, acc/3 = completions) plus the newest scored
-    * (ts_ms, event_id) — the at-least-once guard. */
-  case class PatternState(acc: Long, last_ms: Long, last_event_id: Long)
+  /** Output of [[patternStream]]: the k-cycle automaton's running
+    * (completions, open stage). */
   case class PatternProgress(user_id: Long, n_funnels: Long,
       open_stage: Long)
 
-  /** Streaming row-pattern recognition (continuous e19): the same
-    * greedy click→view→purchase integer automaton, carried as ONE long
-    * of keyed state per user — each arriving event either advances the
-    * accumulator by 1 or leaves it (the 3-cycle encoding from the
-    * batch twin), and the running (completions, open stage) emits per
-    * batch. A fold is order-sensitive, so the state also carries the
-    * newest scored (ts, event_id): a bucket at or before it (late
-    * arrival, duplicate redelivery) is DROPPED rather than folded out
-    * of order — fail-safe under at-least-once delivery, same guard as
-    * [[anomalyStream]]; in-order replay then reproduces batch e19
-    * exactly (spec-pinned). State is O(1) per user — three longs. */
-  def patternStream(events: Dataset[KeyedEvent]): Dataset[PatternProgress] = {
-    implicit val pe: org.apache.spark.sql.Encoder[PatternProgress] =
-      Encoders.product[PatternProgress]
-    implicit val se: org.apache.spark.sql.Encoder[PatternState] =
-      Encoders.product[PatternState]
-    implicit val ke: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[PatternState, PatternProgress](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (user: Long, batch: Iterator[KeyedEvent], state: GroupState[PatternState]) =>
-          var st = state.getOption.getOrElse(PatternState(0L, Long.MinValue, Long.MinValue))
-          batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val fresh = e.ts.getTime > st.last_ms ||
-              (e.ts.getTime == st.last_ms && e.event_id > st.last_event_id)
-            if (fresh) {
-              val c = e.event_type match {
-                case "click" => 1L; case "view" => 2L; case "purchase" => 3L
-                case _ => 0L
-              }
-              val acc = if (c >= 1L && st.acc % 3L == c - 1L) st.acc + 1L else st.acc
-              st = PatternState(acc, e.ts.getTime, e.event_id)
-            }
-          }
-          state.update(st)
-          Iterator.single(PatternProgress(user, st.acc / 3L, st.acc % 3L))
-      }
-  }
+  /** Streaming row-pattern recognition (continuous e19): the batch
+    * k-cycle step ([[graft.operators.Events.cycleStep]]) over
+    * click→view→purchase, carried as keyed state per user — each
+    * arriving event either advances the accumulator by 1 or leaves it —
+    * and the running (completions, open stage) emits per batch. A fold
+    * is order-sensitive; [[eventTimeFold]] supplies the order and the
+    * at-least-once fence, so in-order replay reproduces batch e19
+    * exactly (spec-pinned). State is O(1) per user. */
+  def patternStream(events: Dataset[KeyedEvent]): Dataset[PatternProgress] =
+    eventTimeFold(events)(_.user_id, Encoders.scalaLong, Events.CycleState(),
+        Encoders.product[PatternProgress])(
+      (_, s, e, t, _) => (Events.cycleStep(3L, Long.MaxValue)(s, t,
+        e.event_id, funnelCode(e.event_type)), Nil),
+      (user, s, _) => Seq(PatternProgress(user, s.acc / 3L, s.acc % 3L)))
 
   /** One valued event of the CUSUM stream — e36's input unit. */
   case class ValuedEvent(event_type: String, event_id: Long,
-      ts: java.sql.Timestamp, value: Double)
-  /** Per-type CUSUM state: the literal recurrence accumulator plus the
-    * newest scored (ts in MICROS, event_id) for the at-least-once
-    * guard — micros, not millis, because batch e36 orders by the full
-    * timestamp and the corpus ships micros precision (the
-    * repeatWithinStream lesson: a millis guard would both reorder and
-    * silently drop same-millisecond siblings). */
-  case class CusumState(s_e6: Long, last_us: Long, last_event_id: Long)
+      ts: java.sql.Timestamp, value: Double) extends EventTime
   /** One monitored event's CUSUM emission — batch e36's row shape. */
   case class CusumRow(event_type: String, event_id: Long, s_e6: Long,
       alarm: Long)
@@ -2069,11 +2103,10 @@ object StreamOps {
     * LITERAL recurrence S ← max(0, S + x − k) is the natural streaming
     * form (one long of state per event type; the batch query's
     * closed-form windows exist precisely because batch has no
-    * accumulator). Same at-least-once discipline as [[patternStream]]:
-    * state carries the newest scored (ts, event_id), duplicates and
-    * late arrivals at or before it are dropped, so in-order replay
-    * reproduces batch e36 row for row (spec-pinned, including the
-    * closed-form ≡ recurrence identity across the batch/stream pair). */
+    * accumulator). [[eventTimeFold]] drops duplicates and late arrivals,
+    * so in-order replay reproduces batch e36 row for row (spec-pinned,
+    * including the closed-form ≡ recurrence identity across the
+    * batch/stream pair). */
   def cusumStream(events: Dataset[ValuedEvent]): Dataset[CusumRow] =
     cusumKeyedState(events, restartOnAlarm = false)
 
@@ -2095,104 +2128,51 @@ object StreamOps {
     cusumKeyedState(events, restartOnAlarm = true)
 
   private def cusumKeyedState(events: Dataset[ValuedEvent],
-      restartOnAlarm: Boolean): Dataset[CusumRow] = {
-    implicit val re: org.apache.spark.sql.Encoder[CusumRow] =
-      Encoders.product[CusumRow]
-    implicit val se: org.apache.spark.sql.Encoder[CusumState] =
-      Encoders.product[CusumState]
-    implicit val ke: org.apache.spark.sql.Encoder[String] = Encoders.STRING
-    def micros(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState[CusumState, CusumRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (tpe: String, batch: Iterator[ValuedEvent],
-            state: GroupState[CusumState]) =>
-          var st = state.getOption
-            .getOrElse(CusumState(0L, Long.MinValue, Long.MinValue))
-          val out = Seq.newBuilder[CusumRow]
-          batch.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val t = micros(e.ts)
-            val fresh = t > st.last_us ||
-              (t == st.last_us && e.event_id > st.last_event_id)
-            if (fresh) {
-              // EXACTLY the batch side's arithmetic: cents quantum
-              // (BigDecimal HALF_UP at scale 0 of value*100 — Spark's
-              // round()) scaled to e6, the integer-provenance form
-              // that hashes identically in DuckDB — not round(x*1e6),
-              // whose knife-edge doubles diverge across engines
-              val d = BigDecimal(e.value * 100)
-                .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong *
-                10000L - graft.operators.Events.CusumSlackE6
-              val s = math.max(0L, st.s_e6 + d)
-              val alarm = s >= graft.operators.Events.CusumAlarmE6
-              // restart posture: the alarm fires once, then the
-              // statistic re-arms from 0 (Page's decision rule)
-              val carried = if (restartOnAlarm && alarm) 0L else s
-              st = CusumState(carried, t, e.event_id)
-              out += CusumRow(tpe, e.event_id, s, if (alarm) 1L else 0L)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
+      restartOnAlarm: Boolean): Dataset[CusumRow] =
+    eventTimeFold(events)(_.event_type, Encoders.STRING, 0L,
+        Encoders.product[CusumRow]) { (tpe, s0, e, _, _) =>
+      // EXACTLY the batch side's arithmetic: cents quantum
+      // (BigDecimal HALF_UP at scale 0 of value*100 — Spark's
+      // round()) scaled to e6, the integer-provenance form
+      // that hashes identically in DuckDB — not round(x*1e6),
+      // whose knife-edge doubles diverge across engines
+      val d = BigDecimal(e.value * 100)
+        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong *
+        10000L - Events.CusumSlackE6
+      val s = math.max(0L, s0 + d)
+      val alarm = s >= Events.CusumAlarmE6
+      // restart posture: the alarm fires once, then the
+      // statistic re-arms from 0 (Page's decision rule)
+      (if (restartOnAlarm && alarm) 0L else s,
+        Seq(CusumRow(tpe, e.event_id, s, if (alarm) 1L else 0L)))
+    }
 
-  /** Per-type EWMA state: the last ≤15 scored v_e6 (oldest first —
-    * with the arriving event they form the 16-lag window) plus the
-    * newest scored (ts micros, event_id) for the at-least-once guard
-    * (the cusumStream discipline). O(16 longs) per event type. */
-  case class EwmaState(recent: Seq[Long], last_us: Long,
-      last_event_id: Long)
   /** One smoothed emission — batch e37's row shape. */
   case class EwmaRow(event_type: String, event_id: Long, ewma_q16: Long,
       hot: Long)
 
   /** Streaming e37: the EWMA control chart as keyed state — the last
-    * 15 values plus the arriving one ARE the batch query's 16-lag
-    * window, so the streamed statistic is bit-identical to the batch
-    * linear form by construction (spec-pinned row for row). Same
-    * at-least-once discipline as [[cusumStream]]: duplicates and late
-    * arrivals at or before the newest scored (ts, event_id) are
-    * dropped. */
+    * 15 scored values (oldest first) plus the arriving one ARE the batch
+    * query's 16-lag window, so the streamed statistic is bit-identical
+    * to the batch linear form by construction (spec-pinned row for
+    * row). O(16 longs) per event type; duplicates and late arrivals are
+    * dropped by [[eventTimeFold]]. */
   def ewmaStream(events: Dataset[ValuedEvent]): Dataset[EwmaRow] = {
-    implicit val re: org.apache.spark.sql.Encoder[EwmaRow] =
-      Encoders.product[EwmaRow]
-    implicit val se: org.apache.spark.sql.Encoder[EwmaState] =
-      Encoders.product[EwmaState]
-    implicit val ke: org.apache.spark.sql.Encoder[String] = Encoders.STRING
-    def micros(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    val lags = graft.operators.Events.EwmaLags
-    val hotAt = graft.operators.Events.EwmaHotE6 * 65536L
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState[EwmaState, EwmaRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (tpe: String, batch: Iterator[ValuedEvent],
-            state: GroupState[EwmaState]) =>
-          var st = state.getOption
-            .getOrElse(EwmaState(Seq.empty, Long.MinValue, Long.MinValue))
-          val out = Seq.newBuilder[EwmaRow]
-          batch.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val t = micros(e.ts)
-            val fresh = t > st.last_us ||
-              (t == st.last_us && e.event_id > st.last_event_id)
-            if (fresh) {
-              val v = BigDecimal(e.value * 100)
-                .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong * 10000L
-              val win = (st.recent :+ v).takeRight(lags) // oldest first
-              val m = win.length
-              var s = 0L
-              var i = 0
-              // index i (oldest first) is lag j = m−1−i → weight 2^(15−j)
-              while (i < m) { s += win(i) * (1L << (16 - m + i)); i += 1 }
-              st = EwmaState(win.takeRight(lags - 1), t, e.event_id)
-              out += EwmaRow(tpe, e.event_id, s, if (s >= hotAt) 1L else 0L)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    val lags = Events.EwmaLags
+    val hotAt = Events.EwmaHotE6 * 65536L
+    eventTimeFold(events)(_.event_type, Encoders.STRING, Seq.empty[Long],
+        Encoders.product[EwmaRow]) { (tpe, recent, e, _, _) =>
+      val v = BigDecimal(e.value * 100)
+        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong * 10000L
+      val win = (recent :+ v).takeRight(lags) // oldest first
+      val m = win.length
+      var s = 0L
+      var i = 0
+      // index i (oldest first) is lag j = m−1−i → weight 2^(15−j)
+      while (i < m) { s += win(i) * (1L << (16 - m + i)); i += 1 }
+      (win.takeRight(lags - 1),
+        Seq(EwmaRow(tpe, e.event_id, s, if (s >= hotAt) 1L else 0L)))
+    }
   }
 
   /** One staged (source, md5-hex) row of the KMV stream — the unit
@@ -2200,7 +2180,7 @@ object StreamOps {
   case class SourcedHash(source: String, h: String)
   /** Per-source KMV snapshot after a micro-batch: the current ≤k-min
     * sketch (ascending) plus the monotone rows-folded counter that
-    * orders snapshots (the permuteStream n_seen discipline). */
+    * orders snapshots (the [[Fenced]] `n_seen` discipline). */
   case class KmvSnapshot(source: String, n_seen: Long, sketch: Seq[String])
   case class KmvState(n_seen: Long, mins: Seq[String])
 
@@ -2241,18 +2221,10 @@ object StreamOps {
       }
   }
 
-  /** Per-type seasonal state: the open hour buckets of the trailing
-    * day (hour_s → running cents sum, pruned below current−86400 s —
-    * ≤25 pairs per event type), the monotone rows-folded counter that
-    * orders emissions (the permuteStream n_seen discipline: a bucket's
-    * sum is monotone within its hour but the emitted row set is not),
-    * and the newest scored (ts micros, event_id) for the
-    * at-least-once guard. */
-  case class SeasonalState(hours: Seq[Long], sums: Seq[Long],
-      n_seen: Long, last_us: Long, last_event_id: Long)
   /** One seasonal emission — batch e38's row shape plus the ordering
-    * counter. base/resid are None while the day-back hour is absent
-    * (batch's NULL). */
+    * counter `n_seen` (a bucket's sum is monotone within its hour but
+    * the emitted row set is not). base/resid are None while the
+    * day-back hour is absent (batch's NULL). */
   case class SeasonalRow(event_type: String, hour_s: Long, sum_c: Long,
       base_c: Option[Long], resid_c: Option[Long], shifted: Long,
       n_seen: Long)
@@ -2263,57 +2235,27 @@ object StreamOps {
     * hour's bucket. In-order replay makes the day-back bucket final
     * before the current hour opens (hour h−86400 closes strictly
     * before h begins), so the LATEST emission per (type, hour) — by
-    * n_seen — equals batch e38 row for row (spec-pinned). Same
-    * at-least-once discipline as [[cusumStream]]: duplicates and late
-    * arrivals at or before the newest scored (ts, event_id) are
-    * dropped, so redelivery cannot double-count a bucket. State is
-    * ≤25 (hour, sum) pairs + three longs per event type. */
+    * n_seen — equals batch e38 row for row (spec-pinned).
+    * [[eventTimeFold]] drops duplicates and late arrivals, so
+    * redelivery cannot double-count a bucket. State is the open hour
+    * buckets of the trailing day (hour_s → running cents sum, ≤25
+    * pairs per event type). */
   def seasonalResidStream(events: Dataset[ValuedEvent]): Dataset[SeasonalRow] = {
-    implicit val re: org.apache.spark.sql.Encoder[SeasonalRow] =
-      Encoders.product[SeasonalRow]
-    implicit val se: org.apache.spark.sql.Encoder[SeasonalState] =
-      Encoders.product[SeasonalState]
-    implicit val ke: org.apache.spark.sql.Encoder[String] = Encoders.STRING
-    def micros(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    val threshold = graft.operators.Events.SeasonalResidC
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState[SeasonalState, SeasonalRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (tpe: String, batch: Iterator[ValuedEvent],
-            state: GroupState[SeasonalState]) =>
-          var st = state.getOption
-            .getOrElse(SeasonalState(Seq.empty, Seq.empty, 0L,
-              Long.MinValue, Long.MinValue))
-          val buckets = scala.collection.mutable.LinkedHashMap(
-            st.hours.zip(st.sums): _*)
-          var nSeen = st.n_seen
-          var lastUs = st.last_us
-          var lastId = st.last_event_id
-          val out = Seq.newBuilder[SeasonalRow]
-          batch.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val t = micros(e.ts)
-            val fresh = t > lastUs || (t == lastUs && e.event_id > lastId)
-            if (fresh) {
-              val h = Math.floorDiv(t, 3600L * 1000000L) * 3600L
-              val c = BigDecimal(e.value * 100)
-                .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-              val sum = buckets.getOrElse(h, 0L) + c
-              buckets.update(h, sum)
-              // day-back buckets stay needed for the CURRENT hour only
-              // (in-order: h is non-decreasing), prune strictly older
-              buckets.filterInPlace { case (hb, _) => hb >= h - 86400L }
-              val base = buckets.get(h - 86400L)
-              nSeen += 1L; lastUs = t; lastId = e.event_id
-              out += SeasonalRow(tpe, h, sum, base, base.map(sum - _),
-                if (base.exists(b => math.abs(sum - b) >= threshold)) 1L
-                else 0L, nSeen)
-            }
-          }
-          state.update(SeasonalState(buckets.keys.toSeq,
-            buckets.values.toSeq, nSeen, lastUs, lastId))
-          out.result().iterator
-      }
+    val threshold = Events.SeasonalResidC
+    eventTimeFold(events)(_.event_type, Encoders.STRING, Map.empty[Long, Long],
+        Encoders.product[SeasonalRow]) { (tpe, buckets, e, t, n) =>
+      val h = Math.floorDiv(t, 3600L * 1000000L) * 3600L
+      val c = BigDecimal(e.value * 100)
+        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+      val sum = buckets.getOrElse(h, 0L) + c
+      // day-back buckets stay needed for the CURRENT hour only
+      // (in-order: h is non-decreasing), prune strictly older
+      val kept = buckets.updated(h, sum).filter(_._1 >= h - 86400L)
+      val base = kept.get(h - 86400L)
+      (kept, Seq(SeasonalRow(tpe, h, sum, base, base.map(sum - _),
+        if (base.exists(b => math.abs(sum - b) >= threshold)) 1L else 0L,
+        n)))
+    }
   }
 
   /** One verified near-dup pair with its sources attached — d24's
@@ -2378,11 +2320,9 @@ object StreamOps {
   }
 
   /** Open-session keyed state for [[concurrencyStream]]: the live
-    * session's [start, end] seconds plus the newest folded (ts,
-    * event_id) — four longs per user, O(1). `start_s ==
-    * Long.MinValue` means no session is open yet. */
-  case class ConcSessionState(start_s: Long, end_s: Long,
-      last_ms: Long, last_event_id: Long)
+    * session's [start, end] seconds. `start_s == Long.MinValue` means
+    * no session is open yet. */
+  case class ConcSessionState(start_s: Long, end_s: Long)
 
   /** One spanned hour boundary of one CLOSED session — the unit row
     * of the streaming concurrency census. `entering` is 1 on the
@@ -2399,62 +2339,34 @@ object StreamOps {
     * = sum of `entering`). A session closes when a later event
     * arrives past the gap; the successor opens in the same fold, so
     * every session emits its spans exactly once under in-order
-    * at-least-once delivery — the state carries the newest folded
-    * (ts, event_id) and drops anything at or before it (late arrival,
-    * duplicate redelivery), the [[patternStream]] guard, so a
-    * redelivered chunk emits ZERO rows. Emission algebra: rows are
+    * at-least-once delivery — [[eventTimeFold]] drops anything at or
+    * before the newest folded event (late arrival, duplicate
+    * redelivery), so a redelivered chunk emits ZERO rows. Emission algebra: rows are
     * keyed by (user_id, session_start_s, hour_s) — idempotent under
     * dedup-by-key, additive per hour under the exactly-once front.
     * The trailing open session is emitted only once a gap-breaking
     * event (or an explicit flush sentinel) arrives — the same
     * open-tail contract as the batch/stream windowed aggs.
     *
-    * Scale notes (100 TB): state is four longs per ACTIVE user (the
-    * sessionizer's minimum); emissions are Σ spanned boundaries,
+    * Scale notes (100 TB): state is two longs plus the fence per ACTIVE
+    * user (the sessionizer's minimum); emissions are Σ spanned boundaries,
     * calendar-bounded per session — the same no-join linearization
     * the batch census argues (Events.scala e39), incrementalized. */
   def concurrencyStream(events: Dataset[KeyedEvent]): Dataset[BoundarySpan] = {
-    implicit val be: org.apache.spark.sql.Encoder[BoundarySpan] =
-      Encoders.product[BoundarySpan]
-    implicit val se: org.apache.spark.sql.Encoder[ConcSessionState] =
-      Encoders.product[ConcSessionState]
-    implicit val ke: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-    val gap = graft.operators.Events.SessionGapS
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[ConcSessionState, BoundarySpan](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (user: Long, batch: Iterator[KeyedEvent],
-            state: GroupState[ConcSessionState]) =>
-          var st = state.getOption.getOrElse(ConcSessionState(
-            Long.MinValue, Long.MinValue, Long.MinValue, Long.MinValue))
-          val out = scala.collection.mutable.ArrayBuffer.empty[BoundarySpan]
-          def emitSpans(start: Long, end: Long): Unit = {
-            // ⌈start/3600⌉·3600 .. ⌊end/3600⌋·3600 — the batch explode
-            val sh = ((start + 3599L) / 3600L) * 3600L
-            val eh = (end / 3600L) * 3600L
-            var h = sh
-            while (h <= eh) {
-              out += BoundarySpan(user, start, h, if (h == sh) 1L else 0L)
-              h += 3600L
-            }
-          }
-          batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val fresh = e.ts.getTime > st.last_ms ||
-              (e.ts.getTime == st.last_ms && e.event_id > st.last_event_id)
-            if (fresh) {
-              val ts = Math.floorDiv(e.ts.getTime, 1000L)
-              if (st.start_s == Long.MinValue)
-                st = ConcSessionState(ts, ts, e.ts.getTime, e.event_id)
-              else if (ts - st.end_s > gap) {
-                emitSpans(st.start_s, st.end_s)
-                st = ConcSessionState(ts, ts, e.ts.getTime, e.event_id)
-              } else
-                st = ConcSessionState(st.start_s, ts, e.ts.getTime, e.event_id)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    val gap = Events.SessionGapS
+    eventTimeFold(events)(_.user_id, Encoders.scalaLong,
+        ConcSessionState(Long.MinValue, Long.MinValue),
+        Encoders.product[BoundarySpan]) { (user, st, _, t, _) =>
+      val ts = Math.floorDiv(t, 1000000L)
+      if (st.start_s == Long.MinValue) (ConcSessionState(ts, ts), Nil)
+      else if (ts - st.end_s > gap) {
+        // ⌈start/3600⌉·3600 .. ⌊end/3600⌋·3600 — the batch explode
+        val sh = ((st.start_s + 3599L) / 3600L) * 3600L
+        val eh = (st.end_s / 3600L) * 3600L
+        (ConcSessionState(ts, ts), (sh to eh by 3600L).map(h =>
+          BoundarySpan(user, st.start_s, h, if (h == sh) 1L else 0L)))
+      } else (ConcSessionState(st.start_s, ts), Nil)
+    }
   }
 
   /** One (shingle, batch) incidence row — the stream form of x45's
@@ -2495,133 +2407,47 @@ object StreamOps {
   def noveltyStream(inc: Dataset[ShingleIncidence]): Dataset[ShingleIncidence] =
     inc.dropDuplicates(Seq("shingle"))
 
-  case class PermuteState(mask: Long, n_complete: Long, n_seen: Long,
-      last_ms: Long, last_event_id: Long)
   case class PermuteProgress(user_id: Long, n_complete: Long,
       open_mask: Long, n_seen: Long)
 
   /** Streaming PERMUTE recognition (continuous e28): the batch
-    * bitmask automaton — one click + one view + one purchase in any
-    * order, a repeat restarting the attempt — carried as keyed state.
-    * Same at-least-once discipline as [[patternStream]]: the state
-    * carries the newest scored (ts, event_id) and drops anything at
-    * or before it (late arrival, duplicate redelivery), so in-order
-    * replay reproduces batch e28 exactly (spec-pinned). `n_seen`
-    * (stage events folded) is monotone and orders the emitted
-    * progress rows — the mask itself is not monotone, so consumers
-    * take the row with the highest n_seen as current. State is O(1)
-    * per user: five longs. */
-  def permuteStream(events: Dataset[KeyedEvent]): Dataset[PermuteProgress] = {
-    implicit val pe: org.apache.spark.sql.Encoder[PermuteProgress] =
-      Encoders.product[PermuteProgress]
-    implicit val se: org.apache.spark.sql.Encoder[PermuteState] =
-      Encoders.product[PermuteState]
-    implicit val ke: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-    val full = 7L
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[PermuteState, PermuteProgress](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (user: Long, batch: Iterator[KeyedEvent], state: GroupState[PermuteState]) =>
-          var st = state.getOption.getOrElse(
-            PermuteState(0L, 0L, 0L, Long.MinValue, Long.MinValue))
-          batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val fresh = e.ts.getTime > st.last_ms ||
-              (e.ts.getTime == st.last_ms && e.event_id > st.last_event_id)
-            if (fresh) {
-              val c = e.event_type match {
-                case "click" => 1L; case "view" => 2L; case "purchase" => 3L
-                case _ => 0L
-              }
-              st =
-                if (c >= 1L) {
-                  val bit = 1L << (c - 1L).toInt
-                  val m0 = if ((st.mask & bit) != 0L) bit else st.mask | bit
-                  if (m0 == full)
-                    PermuteState(0L, st.n_complete + 1L, st.n_seen + 1L,
-                      e.ts.getTime, e.event_id)
-                  else
-                    PermuteState(m0, st.n_complete, st.n_seen + 1L,
-                      e.ts.getTime, e.event_id)
-                } else st.copy(last_ms = e.ts.getTime, last_event_id = e.event_id)
-            }
-          }
-          state.update(st)
-          Iterator.single(
-            PermuteProgress(user, st.n_complete, st.mask, st.n_seen))
-      }
-  }
+    * bitmask step ([[graft.operators.Events.permuteStep]]) — one click +
+    * one view + one purchase in any order, a repeat restarting the
+    * attempt — carried as keyed state. [[eventTimeFold]] supplies the
+    * order and the at-least-once fence, so in-order replay reproduces
+    * batch e28 exactly (spec-pinned). The mask is not monotone, so
+    * consumers take the row with the highest `n_seen` as current. State
+    * is O(1) per user. */
+  def permuteStream(events: Dataset[KeyedEvent]): Dataset[PermuteProgress] =
+    eventTimeFold(events)(_.user_id, Encoders.scalaLong, Events.PermuteState(),
+        Encoders.product[PermuteProgress])(
+      (_, s, e, t, _) => (Events.permuteStep(3)(s, t, e.event_id,
+        funnelCode(e.event_type)), Nil),
+      (user, s, n) => Seq(PermuteProgress(user, s.n_complete, s.open_mask, n)))
 
-  case class RepeatWithinState(stage: Long, bc: Long, t0_us: Long,
-      n_complete: Long, sum_b: Long, n_expired: Long, n_seen: Long,
-      last_us: Long, last_event_id: Long)
   case class RepeatWithinProgress(user_id: Long, n_complete: Long,
       sum_b: Long, n_expired: Long, open_state: Long, open_b: Long,
       n_seen: Long)
 
   /** Streaming counted-repeat-under-deadline recognition (continuous
-    * e30 — the family's last member without a streaming twin, VERDICT
-    * r10 #8): `A B{minB,} C WITHIN w` as keyed state. The fold is the
-    * batch automaton verbatim — expiry precedes the transition (e21's
-    * rule: an event arriving past `w` from the open attempt's start
-    * expires it FIRST, and may itself then open a fresh attempt), the
-    * counted-repeat rule applies after. The expiry clock is EVENT time
-    * in micros (the batch's unix_micros), not wall clock, so replay
-    * reproduces batch e30 exactly (spec-pinned). Same at-least-once
-    * discipline as [[patternStream]]: the state carries the newest
-    * scored (t_us, event_id) and drops anything at or before it.
-    * `n_seen` counts folded events and orders the emitted progress
-    * rows. State is O(1) per user: eight longs. */
+    * e30): `A B{minB,} C WITHIN w` as keyed state, folded by the batch
+    * step ([[graft.operators.Events.repeatStep]]) — expiry precedes the
+    * transition (e21's rule: an event arriving past `w` from the open
+    * attempt's start expires it FIRST, and may itself then open a fresh
+    * attempt), the counted-repeat rule applies after. The expiry clock
+    * is EVENT time in micros (the batch's unix_micros), not wall clock,
+    * and [[eventTimeFold]] supplies the order and the at-least-once
+    * fence, so replay reproduces batch e30 exactly (spec-pinned). State
+    * is O(1) per user. */
   def repeatWithinStream(events: Dataset[KeyedEvent], minB: Int,
       windowMicros: Long): Dataset[RepeatWithinProgress] = {
     require(minB >= 1 && windowMicros > 0L, "need minB >= 1, window > 0")
-    implicit val pe: org.apache.spark.sql.Encoder[RepeatWithinProgress] =
-      Encoders.product[RepeatWithinProgress]
-    implicit val se: org.apache.spark.sql.Encoder[RepeatWithinState] =
-      Encoders.product[RepeatWithinState]
-    implicit val ke: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-    def micros(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[RepeatWithinState, RepeatWithinProgress](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (user: Long, batch: Iterator[KeyedEvent],
-            state: GroupState[RepeatWithinState]) =>
-          var st = state.getOption.getOrElse(RepeatWithinState(
-            0L, 0L, 0L, 0L, 0L, 0L, 0L, Long.MinValue, Long.MinValue))
-          batch.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val t = micros(e.ts)
-            val fresh = t > st.last_us ||
-              (t == st.last_us && e.event_id > st.last_event_id)
-            if (fresh) {
-              val c = e.event_type match {
-                case "click" => 1L; case "view" => 2L; case "purchase" => 3L
-                case _ => 0L
-              }
-              // expiry precedes the transition (the batch's e21 rule)
-              if (st.stage == 1L && t - st.t0_us > windowMicros)
-                st = st.copy(stage = 0L, bc = 0L,
-                  n_expired = st.n_expired + 1L)
-              st =
-                if (st.stage == 0L) {
-                  if (c == 1L) st.copy(stage = 1L, bc = 0L, t0_us = t)
-                  else st
-                } else {
-                  if (c == 2L) st.copy(bc = st.bc + 1L)
-                  else if (c == 3L) {
-                    val hit = st.bc >= minB
-                    st.copy(stage = 0L, bc = 0L,
-                      n_complete = st.n_complete + (if (hit) 1L else 0L),
-                      sum_b = st.sum_b + (if (hit) st.bc else 0L))
-                  } else st
-                }
-              st = st.copy(n_seen = st.n_seen + 1L,
-                last_us = t, last_event_id = e.event_id)
-            }
-          }
-          state.update(st)
-          Iterator.single(RepeatWithinProgress(user, st.n_complete,
-            st.sum_b, st.n_expired, st.stage, st.bc, st.n_seen))
-      }
+    eventTimeFold(events)(_.user_id, Encoders.scalaLong, Events.RepeatState(),
+        Encoders.product[RepeatWithinProgress])(
+      (_, s, e, t, _) => (Events.repeatStep(minB, Int.MaxValue, windowMicros)(
+        s, t, e.event_id, funnelCode(e.event_type)), Nil),
+      (user, s, n) => Seq(RepeatWithinProgress(user, s.n_complete, s.sum_b,
+        s.n_expired, s.open_state, s.open_b, n)))
   }
 
   /** Rollup store schema for [[deltaAggStream]]. */
@@ -2660,10 +2486,11 @@ object StreamOps {
     else s.read.parquet(vs.maxBy(_._1)._2.toString)
   }
 
+  /** Keyed state of [[overlapWithinStream]]: pending (t µs, start id)
+    * clicks and pending (start t µs, start id, view id) pairs. */
   case class OverlapWithinState(
       starts: List[(Long, Long)],
-      pairs: List[(Long, Long, Long)],
-      last_us: Long, last_event_id: Long)
+      pairs: List[(Long, Long, Long)])
   case class OverlapMatch(user_id: Long, start_event_id: Long,
       mid_event_id: Long, end_event_id: Long, span_us: Long)
 
@@ -2677,63 +2504,31 @@ object StreamOps {
     * so a key's state is bounded by window × event rate — the
     * unbounded e32 chain has NO streaming twin because its pending
     * set is O(history) on an all-clicks stream (its scaladoc's
-    * argument; the batch chain form is the answer there). Greedy and
-    * non-backtracking like the batch twin: a pair whose first
-    * purchase misses the deadline is dropped, never retried.
-    * Duplicate redelivery is fenced by the (last_us, last_event_id)
-    * freshness bound (the repeatWithinStream discipline); idle-key
-    * GC would use a state timeout in production — state here is
-    * bounded per ACTIVE key by the window. */
+    * argument). Greedy and non-backtracking like the batch twin: a
+    * pair whose first purchase misses the deadline is dropped, never
+    * retried. Duplicate redelivery is fenced by [[eventTimeFold]];
+    * idle-key GC would use a state timeout in production — state here
+    * is bounded per ACTIVE key by the window. */
   def overlapWithinStream(events: Dataset[KeyedEvent],
       windowMicros: Long): Dataset[OverlapMatch] = {
     require(windowMicros > 0L, "window must be positive")
-    implicit val oe: org.apache.spark.sql.Encoder[OverlapMatch] =
-      Encoders.product[OverlapMatch]
-    implicit val se: org.apache.spark.sql.Encoder[OverlapWithinState] =
-      Encoders.product[OverlapWithinState]
-    implicit val ke: org.apache.spark.sql.Encoder[Long] = Encoders.scalaLong
-    def micros(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[OverlapWithinState, OverlapMatch](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (user: Long, batch: Iterator[KeyedEvent],
-            state: GroupState[OverlapWithinState]) =>
-          var st = state.getOption.getOrElse(
-            OverlapWithinState(Nil, Nil, Long.MinValue, Long.MinValue))
-          val out = scala.collection.mutable.ListBuffer[OverlapMatch]()
-          batch.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val t = micros(e.ts)
-            val fresh = t > st.last_us ||
-              (t == st.last_us && e.event_id > st.last_event_id)
-            if (fresh) {
-              // event-time expiry BOUNDS the state: anything older
-              // than the window can never complete in-window again
-              st = st.copy(
-                starts = st.starts.filter(s => t - s._1 <= windowMicros),
-                pairs = st.pairs.filter(p => t - p._1 <= windowMicros))
-              e.event_type match {
-                case "click" =>
-                  st = st.copy(starts = st.starts :+ ((t, e.event_id)))
-                case "view" =>
-                  st = st.copy(
-                    pairs = st.pairs ++
-                      st.starts.map(s => (s._1, s._2, e.event_id)),
-                    starts = Nil)
-                case "purchase" =>
-                  st.pairs.foreach { p =>
-                    out += OverlapMatch(user, p._2, p._3, e.event_id,
-                      t - p._1)
-                  }
-                  st = st.copy(pairs = Nil)
-                case _ => ()
-              }
-              st = st.copy(last_us = t, last_event_id = e.event_id)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    eventTimeFold(events)(_.user_id, Encoders.scalaLong,
+        OverlapWithinState(Nil, Nil), Encoders.product[OverlapMatch]) {
+      (user, st, e, t, _) =>
+        // event-time expiry BOUNDS the state: anything older
+        // than the window can never complete in-window again
+        val starts = st.starts.filter(s => t - s._1 <= windowMicros)
+        val pairs = st.pairs.filter(p => t - p._1 <= windowMicros)
+        e.event_type match {
+          case "click" =>
+            (OverlapWithinState(starts :+ ((t, e.event_id)), pairs), Nil)
+          case "view" => (OverlapWithinState(Nil,
+            pairs ++ starts.map(s => (s._1, s._2, e.event_id))), Nil)
+          case "purchase" => (OverlapWithinState(starts, Nil),
+            pairs.map(p => OverlapMatch(user, p._2, p._3, e.event_id, t - p._1)))
+          case _ => (OverlapWithinState(starts, pairs), Nil)
+        }
+    }
   }
 
   /** Histogram schema maintained by [[budgetThresholdStream]]. */

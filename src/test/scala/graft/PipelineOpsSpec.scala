@@ -1258,7 +1258,7 @@ class PipelineOpsSpec extends SparkSpecBase {
           if (codeOf(t) == acc % 3 + 1) acc += 1 }
         u -> (acc / 3, acc % 3)
       }.toMap
-      val gotSets = Events.patternCountSets(df, sets).collect()
+      val gotSets = Events.patternCount(df, sets).collect()
         .map(r => r.getAs[Long]("user_id") ->
           (r.getAs[Long]("n_funnels"), r.getAs[Long]("open_stage"))).toMap
       assert(gotSets == wantSets, s"sets diverged: n=$n")
@@ -1277,7 +1277,7 @@ class PipelineOpsSpec extends SparkSpecBase {
         }
         u -> (acc / 3, acc % 3, nexp)
       }.toMap
-      val gotWin = Events.patternCountWithin(df, stages, W).collect()
+      val gotWin = Events.patternCount(df, stages.map(Seq(_)), W).collect()
         .map(r => r.getAs[Long]("user_id") ->
           (r.getAs[Long]("n_funnels"), r.getAs[Long]("open_stage"),
             r.getAs[Long]("n_expired"))).toMap
@@ -3111,14 +3111,14 @@ class PipelineOpsSpec extends SparkSpecBase {
     // generalized pattern: a 2-stage cycle counts independently of the
     // 3-stage one (user 1 has C V C V -> 2 completions of (C,V))
     val ev2 = graft.Tables.events(spark, dir)
-    val two = Events.patternCount(ev2, Seq("click", "view")).collect()
+    val two = Events.patternCount(ev2, Seq(Seq("click"), Seq("view"))).collect()
       .map(r => r.getAs[Long]("user_id") ->
         (r.getAs[Long]("n_funnels"), r.getAs[Long]("open_stage"))).toMap
     assert(two(1L) == ((2L, 0L)), s"got ${two(1L)}")
     assert(two(3L) == ((0L, 1L))) // V P C -> only the trailing C opens
     // degenerate pattern guard
     intercept[IllegalArgumentException] {
-      Events.patternCount(ev2, Seq("click", "click"))
+      Events.patternCount(ev2, Seq(Seq("click"), Seq("click")))
     }
   }
 
@@ -3173,7 +3173,7 @@ class PipelineOpsSpec extends SparkSpecBase {
           (acc, c) => when(c >= 1L && acc % k === c - 1L, acc + 1L)
             .otherwise(acc)).as("st"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val got = Events.patternCount(rows, stages).collect()
+    val got = Events.patternCount(rows, stages.map(Seq(_))).collect()
       .map(r => r.getAs[Long]("user_id") ->
         (r.getAs[Long]("n_funnels") * k + r.getAs[Long]("open_stage"))).toMap
     assert(got == ref, s"streamed fold diverged: ${got.toSeq.diff(ref.toSeq)}")
@@ -3233,8 +3233,8 @@ class PipelineOpsSpec extends SparkSpecBase {
       (5L, ts(10), 43L, "purchase")
     ).map { case (u, t, id, ty) => (u, t, id, ty, 0.0d) }
       .toDF("user_id", "ts", "event_id", "event_type", "value")
-    val out = Events.patternCountWithin(rows,
-      Seq("click", "view", "purchase"), W).collect()
+    val out = Events.patternCount(rows,
+      Seq("click", "view", "purchase").map(Seq(_)), W).collect()
       .map(r => r.getAs[Long]("user_id") ->
         (r.getAs[Long]("n_funnels"), r.getAs[Long]("open_stage"),
           r.getAs[Long]("n_expired"))).toMap
@@ -3245,12 +3245,12 @@ class PipelineOpsSpec extends SparkSpecBase {
     assert(out(4L) == ((0L, 0L, 1L)), s"got ${out(4L)}")
     assert(out(5L) == ((1L, 0L, 0L)), s"boundary must be inclusive: ${out(5L)}")
     // an infinite window degrades to plain e19 counting
-    val inf = Events.patternCountWithin(rows,
-      Seq("click", "view", "purchase"), Long.MaxValue).collect()
+    val inf = Events.patternCount(rows,
+      Seq("click", "view", "purchase").map(Seq(_)), Long.MaxValue).collect()
       .map(r => r.getAs[Long]("user_id") ->
         (r.getAs[Long]("n_funnels"), r.getAs[Long]("open_stage"))).toMap
     val plain = Events.patternCount(rows,
-      Seq("click", "view", "purchase")).collect()
+      Seq("click", "view", "purchase").map(Seq(_))).collect()
       .map(r => r.getAs[Long]("user_id") ->
         (r.getAs[Long]("n_funnels"), r.getAs[Long]("open_stage"))).toMap
     assert(inf == plain, "infinite window must equal the unwindowed counter")
@@ -3279,7 +3279,7 @@ class PipelineOpsSpec extends SparkSpecBase {
     ).map { case (u, t, id, ty) => (u, t, id, ty, 0.0d) }
       .toDF("user_id", "ts", "event_id", "event_type", "value")
     val sets = Seq(Seq("click"), Seq("view", "error"), Seq("purchase"))
-    val out = Events.patternCountSets(rows, sets).collect()
+    val out = Events.patternCount(rows, sets).collect()
       .map(r => r.getAs[Long]("user_id") ->
         (r.getAs[Long]("n_funnels"), r.getAs[Long]("open_stage"))).toMap
     assert(out(1L) == ((1L, 0L)))
@@ -3287,17 +3287,17 @@ class PipelineOpsSpec extends SparkSpecBase {
     assert(out(3L) == ((1L, 0L)))
     assert(out(4L) == ((0L, 0L)))
     // single-element sets ≡ the plain stage-list automaton
-    val plain = Events.patternCount(rows, Seq("click", "view", "purchase"))
+    val plain = Events.patternCount(rows, Seq("click", "view", "purchase").map(Seq(_)))
       .collect().map(r => r.getAs[Long]("user_id") ->
         (r.getAs[Long]("n_funnels"), r.getAs[Long]("open_stage"))).toMap
-    val singleton = Events.patternCountSets(rows,
+    val singleton = Events.patternCount(rows,
       Seq(Seq("click"), Seq("view"), Seq("purchase")))
       .collect().map(r => r.getAs[Long]("user_id") ->
         (r.getAs[Long]("n_funnels"), r.getAs[Long]("open_stage"))).toMap
     assert(singleton == plain)
     // non-disjoint sets would make the stage code ambiguous
     val ex = intercept[IllegalArgumentException] {
-      Events.patternCountSets(rows, Seq(Seq("click"), Seq("click", "view")))
+      Events.patternCount(rows, Seq(Seq("click"), Seq("click", "view")))
     }
     assert(ex.getMessage.contains("disjoint"))
   }
@@ -4177,7 +4177,7 @@ class PipelineOpsSpec extends SparkSpecBase {
     ).map { case (u, t, id, ty) => (u, t, id, ty, 0.0d) }
       .toDF("user_id", "ts", "event_id", "event_type", "value")
     def run(df: org.apache.spark.sql.DataFrame) =
-      Events.patternCountRepeatBounded(df, A, B, C, minB = 2, maxB = 4)
+      Events.patternCountRepeat(df, A, B, C, minB = 2, maxB = 4)
         .collect().map(r => r.getAs[Long]("user_id") ->
           (r.getAs[Long]("n_complete"), r.getAs[Long]("sum_b"),
             r.getAs[Long]("n_overflow"), r.getAs[Long]("open_state"),
@@ -4338,7 +4338,7 @@ class PipelineOpsSpec extends SparkSpecBase {
       (2L, ts(8), 13L, "click"), (2L, ts(10), 14L, "purchase")
     ).map { case (u, t, id, ty) => (u, t, id, ty, 0.0d) }
       .toDF("user_id", "ts", "event_id", "event_type", "value")
-    val got = Events.patternOverlapWithin(rows,
+    val got = Events.patternOverlap(rows,
         Seq("click", "view", "purchase"), W).collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("start_event_id"),
         r.getAs[Long]("end_event_id"), r.getAs[Long]("span_us"))).toSet
@@ -4595,7 +4595,7 @@ class PipelineOpsSpec extends SparkSpecBase {
       (4L, ts(0), 31L, "click"), (4L, ts(10), 32L, "view")
     ).map { case (u, t, id, ty) => (u, t, id, ty, 0.0d) }
       .toDF("user_id", "ts", "event_id", "event_type", "value")
-    val out = Events.patternCountRepeatWithin(rows,
+    val out = Events.patternCountRepeat(rows,
         "click", "view", "purchase", minB = 2, windowMicros = w)
       .collect().map(r => r.getAs[Long]("user_id") ->
         (r.getAs[Long]("n_complete"), r.getAs[Long]("sum_b"),

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * process environment. A measurement that wants a different cut,
   * cadence or tokenizer runs Bench or perfbench on two commits; it does
   * not flip a property inside a query path. Both lists are exact, so a
-  * stale entry fails as loudly as a new offender. */
+  * stale entry fails as loudly as a new offender. Event time has one
+  * µs conversion, so no stream twin can order or fence on millis. */
 class SourceAuditSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -56,5 +57,22 @@ class SourceAuditSpec extends AnyFunSuite {
     val offenders = reads.filterNot(r => allowed((r._1, r._2)))
     assert(offenders.isEmpty, s"process-switch reads in query code: $offenders")
     assert(reads.map(r => (r._1, r._2)).toSet == allowed, "stale allowlist entry")
+  }
+
+  test("event time has one µs conversion, and no stream twin sorts on millis") {
+    val defs = sources(mainRoot).flatMap { p =>
+      lines(p).count(_.contains("def micros(")) match {
+        case 0 => Nil
+        case n => Seq(p.getFileName.toString -> n)
+      }
+    }
+    assert(defs == Seq("StreamOps.scala" -> 1), s"`def micros(` definitions: $defs")
+    val SortsOnMillis = """sortBy\(.*ts\.getTime""".r.unanchored
+    val millisSorts = sources(mainRoot.resolve("graft/streaming")).flatMap { p =>
+      lines(p).zipWithIndex.collect {
+        case (SortsOnMillis(), i) => s"${p.getFileName}:${i + 1}"
+      }
+    }
+    assert(millisSorts.isEmpty, s"sorts on ts.getTime (millis): $millisSorts")
   }
 }

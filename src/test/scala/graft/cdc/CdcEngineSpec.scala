@@ -132,8 +132,6 @@ class CdcEngineSpec extends SparkSpecBase {
       .bootstrapAndCdcAvailableNow(Seq("nation" -> graft.Tables.nation(spark, sf)))
     assert(n == 25 + 30)
     // every snapshot change precedes every live change
-    val ops = rec.all.map(_.table).zipWithIndex
-    val lastSnapshot = rec.all.zipWithIndex.filter(_._1.before.isEmpty).map(_._2)
     assert(rec.all.take(25).forall(_.after.get.contains("n_name")))
     assert(rec.all.drop(25).forall(_.after.get.startsWith("""{"pk":""")))
   }

@@ -1547,6 +1547,64 @@ class StreamOpsSpec extends SparkSpecBase {
       s"micros ordering broken: $rows (want 7->$sA then 3->$sB)")
   }
 
+  test("patternStream and permuteStream fold same-millisecond siblings in " +
+      "micros order across micro-batches, equal to batch e19/e28") {
+    implicit val sq = spark.sqlContext
+    def at(ms: Long, us: Int): Timestamp = {
+      val t = new Timestamp(ms); t.setNanos(us * 1000); t
+    }
+    // the second event of each user shares a millisecond with the first
+    // event of the next micro-batch; their micros order (.400 then
+    // .600) is the REVERSE of their event_id order, and the fold
+    // depends on it: funnel user 1 completes only with the view before
+    // the purchase; permute user 2's repeated click must restart the
+    // attempt after the view, not be dropped as stale
+    val first = Seq(
+      KeyedEvent(1L, 1L, "click", at(1000000L, 0)),
+      KeyedEvent(1L, 9L, "view", at(1001000L, 400)),
+      KeyedEvent(2L, 11L, "click", at(1000000L, 0)),
+      KeyedEvent(2L, 19L, "view", at(1001000L, 400)))
+    val second = Seq(
+      KeyedEvent(1L, 5L, "purchase", at(1001000L, 600)),
+      KeyedEvent(2L, 15L, "click", at(1001000L, 600)),
+      KeyedEvent(2L, 20L, "purchase", at(1002000L, 0)))
+    val rows = (first ++ second).toDF()
+    def run[T](name: String, twin: org.apache.spark.sql.Dataset[KeyedEvent] =>
+        org.apache.spark.sql.Dataset[T]): Unit = {
+      val in = MemoryStream[KeyedEvent]
+      val q = twin(in.toDS()).writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      in.addData(first: _*); q.processAllAvailable()
+      in.addData(second: _*); q.processAllAvailable()
+      q.stop()
+    }
+    run("pattern_same_ms", StreamOps.patternStream)
+    val pattern = spark.table("pattern_same_ms").collect()
+      .map(r => r.getAs[Long]("user_id") ->
+        (r.getAs[Long]("n_funnels"), r.getAs[Long]("open_stage")))
+      .groupBy(_._1).view
+      .mapValues(_.map(_._2).maxBy(p => p._1 * 3L + p._2)).toMap
+    val e19 = graft.operators.Events.patternCount(rows,
+        graft.operators.Events.Funnel).collect()
+      .map(r => r.getAs[Long]("user_id") ->
+        (r.getAs[Long]("n_funnels"), r.getAs[Long]("open_stage"))).toMap
+    assert(e19(1L) == ((1L, 0L)), s"fixture: batch e19 completes user 1: $e19")
+    assert(pattern == e19, s"patternStream diverged from batch e19: $pattern")
+    run("permute_same_ms", StreamOps.permuteStream)
+    val permute = spark.table("permute_same_ms").collect()
+      .map(r => r.getAs[Long]("user_id") ->
+        (r.getAs[Long]("n_seen"), r.getAs[Long]("n_complete"),
+          r.getAs[Long]("open_mask")))
+      .groupBy(_._1).view
+      .mapValues(v => { val m = v.map(_._2).maxBy(_._1); (m._2, m._3) }).toMap
+    val e28 = graft.operators.Events.patternCountPermute(rows,
+        Seq("click", "view", "purchase")).collect()
+      .map(r => r.getAs[Long]("user_id") ->
+        (r.getAs[Long]("n_complete"), r.getAs[Long]("open_mask"))).toMap
+    assert(e28(2L) == ((0L, 5L)), s"fixture: batch e28 restarts user 2: $e28")
+    assert(permute == e28, s"permuteStream diverged from batch e28: $permute")
+  }
+
   test("kmvStream: chunked replay converges to the batch kmv_sketch per " +
       "source; duplicate redelivery cannot move the sketch (no guard " +
       "needed — k-min is duplicate-insensitive by construction)") {
