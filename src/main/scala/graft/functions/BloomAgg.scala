@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * staged bit positions of one row, `merge` is ELEMENTWISE OR —
   * associative, commutative and IDEMPOTENT, so like the HLL (and
   * unlike CMS's additive merge) the sketch is duplicate-insensitive:
-  * at-least-once redelivery cannot change it, and the streaming twin
+  * at-least-once redelivery cannot change it, and a streaming consumer
   * needs no exactly-once fence.
   *
   * The aggregate does NOT hash: its child is the staged `array<bigint>`

@@ -1021,18 +1021,6 @@ object Dedup {
       .distinct()
   }
 
-  /** One-row packed-word bloom over a (doc_id, text) frame's distinct
-    * 6-token windows — [[bloomNovelty]]'s corpus side as a standalone
-    * aggregation, used by the streaming twin
-    * [[graft.streaming.StreamOps.bloomStream]] (per-g position arrays
-    * may repeat across docs; OR-merge idempotence makes that free). */
-  def streamingWindowBloom(docs: DataFrame): DataFrame =
-    distinctWindows(docs)
-      .select(bloomPositions(col("g")).as("pos"))
-      .groupBy()
-      .agg(graft.functions.GraftFunctions.bloom_sketch(col("pos"), BloomMBits)
-        .as("bits"))
-
   /** d19: BLOOM-GATED SUBSTRING NOVELTY — approximate decontamination
     * / novelty scoring of an incoming batch against a standing corpus
     * via the engine's native [[graft.functions.BloomAggExpr]]
@@ -1054,7 +1042,7 @@ object Dedup {
     * Scale notes (100 TB): the corpus side collapses to a
     * constant-size sketch (one map-side-combined aggregate, OR-merge
     * — associative, commutative, IDEMPOTENT, so redelivered corpus
-    * rows cannot change it and the streaming twin needs no
+    * rows cannot change it and a streaming consumer needs no
     * exactly-once fence, unlike CMS). The incoming side is a narrow
     * window explode + one broadcast of KB–GB of bits; the exact join
     * runs over the maybe minority only — at a 1% FP floor that is
@@ -1378,22 +1366,6 @@ object Dedup {
 
   /** Containment threshold for subsumption (0.9). */
   val SubsumeTauE6 = 900000L
-
-  /** Per-posting CONTAINMENT index over a standing corpus: one
-    * (shingle, corpus_doc, n_b) row per distinct shingle per doc —
-    * n_b (the doc's distinct-shingle count) rides every posting so an
-    * arriving doc's containment ratio and the larger-container rule
-    * evaluate without a second corpus lookup. The
-    * [[graft.streaming.StreamOps.subsumptionStream]] static side; at
-    * scale persist bucketed by shingle
-    * ([[Warehouse.writeShingleIndex]]'s discipline) and cap
-    * boilerplate shingles with [[dropOverCapKeys]] at build time. */
-  def containmentIndex(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id").as("corpus_doc"), words(col("text")).as("ws"))
-      .select(col("corpus_doc"), array_distinct(shingles3(col("ws"))).as("shs"))
-      .select(col("corpus_doc"), size(col("shs")).cast("long").as("n_b"),
-        explode(col("shs")).as("shingle"))
-      .select(col("shingle"), col("corpus_doc"), col("n_b"))
 
   /** d15: SUBSUMPTION dedup — the ACTION d9's directed containment
     * metric exists for: a document ≥90% contained in a LARGER one

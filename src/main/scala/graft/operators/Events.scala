@@ -180,7 +180,7 @@ object Events {
     * click t1, first view within 24 h after t1, first purchase within
     * 24 h after t2; users with no click drop. Shared by e6 (stage
     * counts) and e18 (conversion rates + latency quantiles). */
-  private[graft] def funnelTimes(ev: DataFrame): DataFrame = {
+  private def funnelTimes(ev: DataFrame): DataFrame = {
     val byUser = Window.partitionBy(col("user_id"))
     val h24 = expr("INTERVAL 24 HOURS")
     ev.select(col("user_id"), col("ts"), col("event_type"))
@@ -340,9 +340,8 @@ object Events {
   /** Largest per-bucket count for which the trailing Σn² still fits the
     * BIGINT `trail_sumsq` OUTPUT column: floor(sqrt(Long.Max /
     * TrailBuckets)) − 1 ≈ 6.19e8 (≈172k events/sec sustained for an
-    * hour, per type). [[anomalyFlags]] and
-    * [[graft.streaming.StreamOps.anomalyStream]] fail LOUDLY above it
-    * rather than wrapping; the is_anomaly test itself is computed in
+    * hour, per type). [[anomalyFlags]] fails LOUDLY above it rather
+    * than wrapping; the is_anomaly test itself is computed in
     * decimal(38,0) / BigInt and is exact for any count up to the bound. */
   val MaxBucketCount: Long =
     math.sqrt(Long.MaxValue.toDouble / TrailBuckets).toLong - 1
@@ -663,7 +662,7 @@ object Events {
     * loop; see /root/reference/handlers/ for its sink contract). */
   /** The e15 change feed: deterministic op mapping over `events` —
     * the frame a CDC source would deliver. */
-  private[graft] def cdcFeed(s: SparkSession, d: String): DataFrame =
+  private def cdcFeed(s: SparkSession, d: String): DataFrame =
     events(s, d)
       .filter(col("event_type").isin("signup", "purchase", "error"))
       .select(
@@ -675,10 +674,9 @@ object Events {
         col("ts"), col("event_id"))
 
   /** Collapse a change feed to its last change per key + change count —
-    * e15's first stage, shared with the streaming twin
-    * [[graft.streaming.StreamOps.cdcCollapseStream]]. One partial-
-    * combined aggregate; max_by avoids a window sort entirely. */
-  private[graft] def collapseFeed(feed: DataFrame): DataFrame =
+    * e15's first stage. One partial-combined aggregate; max_by avoids
+    * a window sort entirely. */
+  private def collapseFeed(feed: DataFrame): DataFrame =
     feed.groupBy(col("key"))
       .agg(
         max_by(struct(col("op"), col("val_c")),
@@ -1085,7 +1083,7 @@ object Events {
   /** One k-cycle step on event (t µs, id, stage code c). The expiry
     * check precedes the transition: the event that breaches the window
     * may itself open a fresh attempt. */
-  private[graft] def cycleStep(k: Long, windowMicros: Long)(
+  private def cycleStep(k: Long, windowMicros: Long)(
       s: CycleState, t: Long, id: Long, c: Long): CycleState = {
     val open = s.acc % k
     val e = if (open > 0L && t - s.start_us > windowMicros)
@@ -1375,7 +1373,7 @@ object Events {
 
   /** One counted-repeat step: expiry first, then the transition with
     * the overflow check. */
-  private[graft] def repeatStep(minB: Int, maxB: Int, windowMicros: Long)(
+  private def repeatStep(minB: Int, maxB: Int, windowMicros: Long)(
       s: RepeatState, t: Long, id: Long, c: Long): RepeatState = {
     val e = if (s.open_state == 1L && t - s.t0_us > windowMicros)
       s.copy(open_state = 0L, open_b = 0L, n_expired = s.n_expired + 1L)
@@ -1446,7 +1444,7 @@ object Events {
   /** PERMUTE state: the open attempt's stage mask and the completions. */
   case class PermuteState(open_mask: Long = 0L, n_complete: Long = 0L)
 
-  private[graft] def permuteStep(k: Int)(s: PermuteState, t: Long, id: Long,
+  private def permuteStep(k: Int)(s: PermuteState, t: Long, id: Long,
       c: Long): PermuteState =
     if (c < 1L) s
     else {
@@ -1525,13 +1523,11 @@ object Events {
     * by event_type — LOW cardinality, so at 100 TB one type = one
     * task; the per-type sequential scan is inherent to CUSUM (S_t
     * depends on every prior row), so day-bucket stitching does not
-    * apply to the statistic itself. The production form is the
-    * KEYED-STATE stream twin
-    * ([[graft.streaming.StreamOps.cusumStream]] /
-    * `cusumRestartStream`): state is O(1) per type and each
-    * micro-batch costs only its own events, so the unbounded
-    * per-type scan never materializes as one task — this batch form
-    * is what the oracle can verify row-for-row. */
+    * apply to the statistic itself. A continuous form would hold
+    * O(1) keyed state per type, so each micro-batch costs only its
+    * own events and the unbounded per-type scan never materializes as
+    * one task — this batch form is what the oracle can verify
+    * row-for-row. */
   def e36CusumDrift(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
@@ -1582,11 +1578,10 @@ object Events {
     * Scale hazard (e29's discipline): the window partitions RAW events
     * by LOW-cardinality event_type — at 100 TB one type = one task.
     * Unlike e36, EWMA's 16-lag truncation makes day-bucket stitching
-    * trivial (each row needs only its 15 predecessors), but the
-    * production form is still the KEYED-STATE stream twin
-    * ([[graft.streaming.StreamOps.ewmaStream]]): O(16 longs) per type,
-    * work bounded per micro-batch — this batch form is what the
-    * oracle can verify row-for-row. */
+    * trivial (each row needs only its 15 predecessors); a continuous
+    * form would hold O(16 longs) of keyed state per type, work bounded
+    * per micro-batch — this batch form is what the oracle can verify
+    * row-for-row. */
   def e37EwmaSmooth(s: SparkSession, d: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))

@@ -420,23 +420,10 @@ object Multimodal {
     * layout — fresh or read back from the bucketed table) and a batch
     * hash frame (m6 shape): batch docs probe their hamming balls,
     * index docs answer — pairs touching the batch only, exact within
-    * [[M7MaxHamming]]. */
+    * [[M7MaxHamming]]. The probe join emits one row PER matched band
+    * key (a pair sharing several qualifying bands repeats); the final
+    * distinct normalizes. */
   private[graft] def imgIncrementalFromIndex(index: DataFrame,
-      batch: DataFrame): DataFrame =
-    imgProbeCandidates(index, batch)
-      .select(least(col("p_doc"), col("doc_id")).as("a"),
-        greatest(col("p_doc"), col("doc_id")).as("b"),
-        col("hamming"))
-      .distinct()
-
-  /** The raw probe join under m8: batch docs probe their hamming
-    * balls against an [[imgIndexKeys]]-layout index — one
-    * (p_doc, doc_id, hamming) row PER matched band key (a pair
-    * sharing several qualifying bands repeats; no distinct, no
-    * normalization), which keeps the stage STATELESS and therefore
-    * valid on unbounded streaming input
-    * ([[graft.streaming.StreamOps.imgDedupStream]]). */
-  private[graft] def imgProbeCandidates(index: DataFrame,
       batch: DataFrame): DataFrame = {
     val probes = batch
       .select(col("doc_id"), col("ahash_hi").as("hi"), col("ahash_lo").as("lo"))
@@ -457,6 +444,10 @@ object Multimodal {
           bit_count(col("p_lo").bitwiseXOR(col("lo")))).cast("long")
           .as("hamming"))
       .filter(col("hamming") <= M7MaxHamming)
+      .select(least(col("p_doc"), col("doc_id")).as("a"),
+        greatest(col("p_doc"), col("doc_id")).as("b"),
+        col("hamming"))
+      .distinct()
   }
 
   /** The m8 pipeline over explicit corpus/batch hash frames (m6

@@ -307,20 +307,6 @@ object Similarity {
     e.withColumn("cluster",
       minCentroid(cents, col("embedding"), col("norm_fp")).getField("cid"))
 
-  /** Assignment AND probe list in one ranked-codebook pass — the
-    * admission projection of the streaming kNN-graph maintainer
-    * ([[graft.streaming.StreamOps.knnGraphStream]]): `cluster` is the
-    * argmax (= probes head), `probes` the `nprobe` nearest cids in
-    * s23's exact order. Stored at admission because both are pure
-    * functions of (vector, pinned codebook) — the standing corpus then
-    * serves the existing→new probe direction without re-ranking. */
-  private[graft] def assignWithProbes(e: DataFrame, cents: Seq[Centroid],
-      nprobe: Int = NProbe): DataFrame =
-    e.withColumn("rc", rankedCentroids(cents, col("embedding"), col("norm_fp")))
-      .select(col("vec_id"), col("embedding"), col("norm_fp"),
-        element_at(col("rc"), 1).getField("cid").as("cluster"),
-        transform(slice(col("rc"), 1, nprobe), _.getField("cid")).as("probes"))
-
   /** IVF probe-list stage: the `nprobe` nearest centroids per query — a
     * narrow slice+explode of the same ranked-codebook array, no
     * exchange (the explode fans each query row out ×nprobe in place). */
@@ -1122,9 +1108,7 @@ object Similarity {
     * within-cluster pairs + CC, a pure function of (corpus,
     * maxCluster), standing once per posture (the cap rides the table
     * NAME and a validated property — the sharedContainment fence; was
-    * session-scoped through round 13). The streaming store
-    * ([[graft.streaming.StreamOps.semDedupIngest]]) is its
-    * continuously-maintained form. */
+    * session-scoped through round 13). */
   private[graft] def sharedSemResolution(s: SparkSession, d: String,
       maxCluster: Option[Int]): DataFrame =
     SessionCaches.getOrBuild(semResCache, s,
@@ -1166,9 +1150,7 @@ object Similarity {
   /** d12's resolution core over an ALREADY-ASSIGNED frame (vec_id,
     * embedding, norm_fp, cluster): within-cluster pair search (the
     * `maxCluster` knob passes through) + alternating-star components +
-    * keep-bit. Shared by the batch query and the streaming store's
-    * compaction cycle ([[graft.streaming.StreamOps.semDedupIngest]]),
-    * so both resolve with the identical plan. */
+    * keep-bit. */
   def resolveSemClusters(assigned: DataFrame,
       maxCluster: Option[Int] = None): DataFrame = {
     val comp = Components.connectedComponents(
@@ -1769,9 +1751,7 @@ object Similarity {
     * 13) and read by its three consumers (s23's listing, s24's single
     * refinement round, s26's two-round unroll): the graph is THE
     * standing artifact this family maintains (n×k rows), bucketed by
-    * src for the refinement self-joins;
-    * [[graft.streaming.StreamOps.knnGraphStream]]'s versioned store is
-    * its continuously-maintained form. */
+    * src for the refinement self-joins. */
   private[graft] def sharedIvfGraph(s: SparkSession, d: String): DataFrame =
     SessionCaches.getOrBuild(ivfGraphCache, s, d)(
       Warehouse.standingTable(s, "graft_ivfgraph", d) { t =>
@@ -1941,13 +1921,12 @@ object Similarity {
     * [[GraphK]] cut. Self-matches are excluded like s1.
     *
     * Scale notes (100 TB): the graph is the standing n×k artifact
-    * ([[graft.streaming.StreamOps.knnGraphStream]]'s store, bucketed
-    * by src at warehouse scale, so each hop joins exchange-free on
-    * the graph side); per query the visited set is ≤ NEntry·(2k + 1)
-    * rows — QUERY-sized, never corpus-sized — and the exact re-score
-    * joins move only those candidate rows. This is the read path the
-    * s22–s26 build ladder exists to serve: queries never scan the
-    * corpus, only the beam's graph neighborhood. */
+    * (bucketed by src at warehouse scale, so each hop joins
+    * exchange-free on the graph side); per query the visited set is
+    * ≤ NEntry·(2k + 1) rows — QUERY-sized, never corpus-sized — and
+    * the exact re-score joins move only those candidate rows. This is
+    * the read path the s22–s26 build ladder exists to serve: queries
+    * never scan the corpus, only the beam's graph neighborhood. */
   def s27GraphSearch(s: SparkSession, d: String): DataFrame =
     graphSearch(withNorm(embeddings(s, d)), sharedIvfGraph(s, d))
       .orderBy(col("qid"), col("rank"))
@@ -1962,9 +1941,8 @@ object Similarity {
           col("norm_fp").as("q_norm")))
 
   /** [[graphSearch]] for an EXPLICIT query frame (qid, q_emb, q_norm)
-    * — the form [[graft.streaming.StreamOps.graphSearchStream]] runs
-    * per arriving micro-batch against the standing graph store. */
-  private[graft] def graphSearchFor(e: DataFrame, graph: DataFrame,
+    * against a standing graph. */
+  private def graphSearchFor(e: DataFrame, graph: DataFrame,
       queries: DataFrame): DataFrame = {
     val cents = collectCodebook(e)
     val g = graph.filter(col("rank") <= GraphK.toLong)

@@ -874,9 +874,9 @@ object TextAnalysis {
     * pure function of (corpus, split) that x38 used to rebuild per
     * execution (explode + distinct over the whole test split, one
     * corpus-gram-sized shuffle per run); it IS the "standing test
-    * split" artifact the decontam streaming twin maintains, so it
-    * earns the sharedGrams13 discipline (r18, VERDICT r17 #2). Eager
-    * checkpoint: built once, in the untimed prepass. */
+    * split" artifact, so it earns the sharedGrams13 discipline (r18,
+    * VERDICT r17 #2). Eager checkpoint: built once, in the untimed
+    * prepass. */
   private[graft] def sharedTestGrams(s: SparkSession, d: String): DataFrame =
     SessionCaches.getOrBuild(testGramsCache, s, d)(
       sharedGrams13(s, d).filter(col("split") === "test")
@@ -1694,14 +1694,13 @@ object TextAnalysis {
     fertilityFrom(fertilityCounts(docs, merges))
 
   /** The additive half of [[bpeFertility]]: per-source word and
-    * BPE-token totals under a FIXED merge list — what the streaming
-    * twin ([[graft.streaming.StreamOps.fertilityStream]]) merges per
-    * batch. Encodes each DISTINCT word once (the merge-fold is the
-    * expensive expression — vocabulary-sized work, token-sized only
-    * at the join), exactly the trainer's own distinct-word stance; no
-    * broadcast hint: a web-scale vocabulary is not driver-sized, and
-    * AQE broadcasts the small side when it genuinely is. */
-  private[graft] def fertilityCounts(docs: DataFrame,
+    * BPE-token totals under a FIXED merge list. Encodes each DISTINCT
+    * word once (the merge-fold is the expensive expression —
+    * vocabulary-sized work, token-sized only at the join), exactly the
+    * trainer's own distinct-word stance; no broadcast hint: a
+    * web-scale vocabulary is not driver-sized, and AQE broadcasts the
+    * small side when it genuinely is. */
+  private def fertilityCounts(docs: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
     val occ = docs.select(col("source"), explode(words(col("text"))).as("w"))
     val vocab = occ.select(col("w")).distinct()
@@ -2112,7 +2111,7 @@ object TextAnalysis {
 
   /** x33's salted-hash keying stage: per doc, token count, the md5
     * draw `hd` and its 4-hex-char (65536-bucket) prefix. */
-  private[graft] def budgetKeyed(docs: DataFrame): DataFrame =
+  private def budgetKeyed(docs: DataFrame): DataFrame =
     budgetKeyedFromStats(docs.select(col("doc_id"),
       size(words(col("text"))).cast("long").as("n_tokens")))
 
@@ -2126,10 +2125,8 @@ object TextAnalysis {
       .withColumn("pfx", conv(substring(col("hd"), 1, 4), 16, 10).cast("int"))
 
   /** x33's 65536-bucket (count, tokens) histogram over a keyed frame —
-    * ADDITIVE (count/sum partials merge exactly on any chunking), so
-    * it is also the per-micro-batch unit the streaming twin
-    * [[graft.streaming.StreamOps.budgetThresholdStream]] absorbs. */
-  private[graft] def budgetHistFromKeyed(keyed: DataFrame): DataFrame =
+    * ADDITIVE (count/sum partials merge exactly on any chunking). */
+  private def budgetHistFromKeyed(keyed: DataFrame): DataFrame =
     keyed.groupBy(col("pfx"))
       .agg(count(lit(1)).as("cnt"), sum(col("n_tok")).as("tok"))
 
@@ -2374,9 +2371,8 @@ object TextAnalysis {
   }
 
   /** Distinct (shingle, train_doc) postings over a train corpus — the
-    * static index [[graft.streaming.StreamOps.contaminationStream]]
-    * joins arriving eval docs against. At scale: persist it with
-    * [[Warehouse.writeShingleIndex]] (bucketed by shingle, the d8
+    * static index arriving eval docs join against. At scale: persist
+    * it with [[Warehouse.writeShingleIndex]] (bucketed by shingle, the d8
     * pattern) so per-batch joins read it back without shuffling the
     * index side (plan-asserted in WarehouseSpec), and apply
     * [[contamination]]'s maxDf cap at build time. */
@@ -2387,14 +2383,12 @@ object TextAnalysis {
       .select(col("shingle"), col("train_doc"))
 
   /** x11's core join over a PERSISTED train-shingle index: shared-shingle
-    * counts per (test_doc, train_doc) — the batch twin of
-    * [[graft.streaming.StreamOps.contaminationStream]], reading the
-    * standing index back from storage instead of rebuilding it per run.
+    * counts per (test_doc, train_doc), reading the standing index
+    * back from storage instead of rebuilding it per run.
     * With the index written by [[Warehouse.writeShingleIndex]] the join
     * plans with NO exchange on the index side (WarehouseSpec), so the
     * per-run shuffle cost is the test batch only — the index side is a
-    * co-located scan. Top-offender ranking is the consumer's rerank, as
-    * in the streaming twin. */
+    * co-located scan. Top-offender ranking is the consumer's rerank. */
   def contaminationFromIndex(trainShingles: DataFrame, testDocs: DataFrame): DataFrame =
     testDocs.select(col("doc_id").as("test_doc"), words(col("text")).as("ws"))
       .select(col("test_doc"),
@@ -2590,13 +2584,10 @@ object TextAnalysis {
     *
     * Scale notes (100 TB): per batch this touches batch-sized and
     * index-sized frames only — the standing md5 set / postings /
-    * containment index / 13-gram set are the persisted artifacts the
-    * d8/subsumption/decontam streaming twins already maintain, the
+    * containment index / 13-gram set are persisted artifacts, the
     * bigram model is vocabulary-sized, and the two boundary scores
     * are one driver-sized broadcast recomputed at the corpus owner's
-    * cadence. [[graft.streaming.StreamOps]] carries the per-component
-    * continuous forms; this row pins their COMPOSED decision
-    * cross-engine. */
+    * cadence. This row pins the COMPOSED decision cross-engine. */
   def x40IngestDecide(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
     val split = Dedup.IncrementalSplit
@@ -2688,12 +2679,10 @@ object TextAnalysis {
   }
 
   /** The x40 decision ASSEMBLY — reason precedence + value-threshold
-    * bucket — over pre-computed component frames, shared by the gated
-    * batch row and [[graft.streaming.StreamOps.ingestDecideStream]]'s
-    * per-batch absorb so the two forms cannot drift in precedence or
-    * schema. All component frames are batch-doc-keyed; `bnd` is the
-    * 1-row [[ccnetBoundaries]] frame. */
-  private[graft] def assembleIngestDecision(batchDocs: DataFrame,
+    * bucket — over pre-computed component frames. All component
+    * frames are batch-doc-keyed; `bnd` is the 1-row
+    * [[ccnetBoundaries]] frame. */
+  private def assembleIngestDecision(batchDocs: DataFrame,
       exact: DataFrame, near: DataFrame, sub: DataFrame, qual: DataFrame,
       lang: DataFrame, splits: DataFrame, dirty: DataFrame,
       scored: DataFrame, bnd: DataFrame): DataFrame =
@@ -2722,108 +2711,6 @@ object TextAnalysis {
           .when(col("mean_lp_e4") >= col("b_head"), "head")
           .when(col("mean_lp_e4") >= col("b_mid"), "middle")
           .otherwise("tail").as("bucket"))
-
-  /** The x40 decision for ONE ARRIVING BATCH against an explicit
-    * prior corpus — the form [[graft.streaming.StreamOps
-    * .ingestDecideStream]] runs per micro-batch. `prior` is the
-    * standing corpus PLUS every earlier admitted arrival (the
-    * stream's append-only store); `standingOnly` is the original
-    * standing corpus, whose test-split 13-grams, train-split bigram
-    * model and tertile boundaries are the decision's FIXED artifacts
-    * (they update at the corpus owner's cadence, not per batch).
-    * Component semantics are x40's restated for an explicit prior:
-    *   - exact: content hash in `prior`, or an earlier (smaller-id)
-    *     doc of the same batch;
-    *   - near: a verified partner in `prior`, or a smaller-id
-    *     verified partner in the batch (candidates from the d8
-    *     incremental postings machinery — batch×prior ∪ batch×batch);
-    *   - subsumed: d15's rule against the containment index of
-    *     prior ∪ batch (container larger, ties to the smaller id).
-    * Applied to the WHOLE arriving set as one batch this equals the
-    * gated x40 row-for-row (spec-pinned — a real cross-derivation:
-    * different exact/near/subsumption constructions, same decisions).
-    * Composed over in-order chunks, exact/near/decontam/bucket remain
-    * x40-exact by construction (their partner/state rules only ever
-    * look at smaller ids or fixed standing state); SUBSUMPTION is the
-    * one visibility-limited component — a container that arrives in a
-    * LATER batch cannot flag an earlier admission, which is the
-    * documented division of labor with
-    * [[graft.streaming.StreamOps.subsumptionStream]]: arrival
-    * screening answers "is this new doc inside what we have", the
-    * reverse direction belongs to the periodic batch pass. */
-  private[graft] def ingestDecideBatch(prior: DataFrame, batch: DataFrame,
-      standingOnly: DataFrame): DataFrame = {
-    val all = prior.select(col("doc_id"), col("text"))
-      .unionByName(batch.select(col("doc_id"), col("text")))
-    val wMd5 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("content_md5"))
-    val priorMd5 = prior
-      .select(md5(normText(col("text"))).as("content_md5")).distinct()
-      .withColumn("in_prior", lit(true))
-    val exact = batch
-      .select(col("doc_id"), md5(normText(col("text"))).as("content_md5"))
-      .withColumn("bmin", min(col("doc_id")).over(wMd5))
-      .join(priorMd5, Seq("content_md5"), "left")
-      .select(col("doc_id"),
-        (coalesce(col("in_prior"), lit(false)) ||
-          col("doc_id") =!= col("bmin")).as("is_dup"))
-    val cands = Dedup.incrementalCandidates(
-      Dedup.lshIndex(prior.repartition(col("doc_id"))),
-      Dedup.lshIndex(batch.repartition(col("doc_id"))), maxBucket = None)
-    val bIds = batch.select(col("doc_id"))
-    val near = Dedup.verifiedPairsFrom(all, cands.select(col("a"), col("b")))
-      .join(bIds.select(col("doc_id").as("a"), lit(true).as("a_in")),
-        Seq("a"), "left")
-      .join(bIds.select(col("doc_id").as("b"), lit(true).as("b_in")),
-        Seq("b"), "left")
-      // every candidate touches the batch: flag the batch member, and
-      // of a batch-internal pair the larger (pairs are canonical a<b)
-      .select(when(col("b_in").isNotNull, col("b")).otherwise(col("a"))
-        .as("doc_id"))
-      .distinct()
-      .withColumn("near_dup", lit(true))
-    val idx = Dedup.containmentIndex(prior)
-      .unionByName(Dedup.containmentIndex(batch))
-    val sub = batch
-      .select(col("doc_id"), words(col("text")).as("ws"))
-      .select(col("doc_id"), array_distinct(shingles3(col("ws"))).as("shs"))
-      .select(col("doc_id"), size(col("shs")).cast("long").as("n_a"),
-        explode(col("shs")).as("shingle"))
-      .join(idx, Seq("shingle"))
-      .filter(col("corpus_doc") =!= col("doc_id"))
-      .groupBy(col("doc_id"), col("corpus_doc"), col("n_a"), col("n_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_a") >= Dedup.MinShinglesA)
-      .filter(col("n_b") > col("n_a") ||
-        (col("n_b") === col("n_a") && col("corpus_doc") < col("doc_id")))
-      .filter(idiv(col("n_shared") * 1000000L, col("n_a"))
-        >= Dedup.SubsumeTauE6)
-      .select(col("doc_id")).distinct()
-      .withColumn("subsumed", lit(true))
-    val subAll = batch.select(col("doc_id"))
-      .join(sub, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("subsumed"), lit(false)).as("subsumed"))
-    val qual = qualitySignals(batch).select(col("doc_id"), col("quality_e3"))
-    val lng = langIdSignals(batch).select(col("doc_id"), col("pred_lang"))
-    val splits = batch
-      .select(col("doc_id"), hashBucket(col("doc_id").cast("string")).as("bk"))
-      .select(col("doc_id"),
-        when(col("bk") < 80L, "train").when(col("bk") < 90L, "val")
-          .otherwise("test").as("split"))
-    val teStanding = gramSets(standingOnly, 13)
-      .filter(col("split") === "test")
-      .select(explode(col("gs")).as("g")).distinct()
-    val dirty = gramSets(batch, 13)
-      .filter(col("split") === "train")
-      .select(col("doc_id"), explode(col("gs")).as("g"))
-      .join(teStanding, Seq("g"), "left_semi")
-      .select(col("doc_id")).distinct()
-      .withColumn("decontam_hit", lit(true))
-    val scoredBatch = bigramMeanLp(standingOnly, batch)
-    val bnd = ccnetBoundaries(bigramMeanLp(standingOnly, standingOnly))
-    assembleIngestDecision(batch, exact, near, subAll, qual, lng, splits,
-      dirty, scoredBatch, bnd)
-  }
 
   /** Merge-round depth for the gated [[x41BpeFertility]] row. */
   val X41Merges = 3
@@ -2903,10 +2790,8 @@ object TextAnalysis {
 
   /** The two x39 counting censuses — UNFLOORED bigram counts (the
     * count floor is a read-time cut, never baked into stored state)
-    * and unigram counts. Both are additive, so the streaming twin
-    * merges them per batch ([[graft.streaming.StreamOps
-    * .colloStream]]). */
-  private[graft] def colloCensus(docs: DataFrame): (DataFrame, DataFrame) = {
+    * and unigram counts. Both are additive. */
+  private def colloCensus(docs: DataFrame): (DataFrame, DataFrame) = {
     val base = docs.select(col("doc_id"), words(col("text")).as("ws"))
     val uni = base.select(explode(col("ws")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
@@ -3408,12 +3293,11 @@ object TextAnalysis {
     * distinct-shingle count estimated from MERGED KMV sketches
     * ([[KmvK]] staged md5 hashes per batch — the x43 machinery), the
     * derived per-batch novel-mass estimate, and the error permille
-    * against the exact curve. This is the CALIBRATION report for the
-    * bounded-memory swap the stream twin documents
-    * ([[graft.streaming.StreamOps.noveltyStream]]'s sketch-tier
-    * fallback): at 100 TB the exact census's per-shingle state is the
-    * expensive side, and a pipeline that switches to the sketch path
-    * reads THIS query to know what accuracy the swap buys.
+    * against the exact curve. This is the CALIBRATION report for a
+    * bounded-memory sketch-tier swap: at 100 TB the exact census's
+    * per-shingle state is the expensive side, and a pipeline that
+    * switches to the sketch path reads THIS query to know what
+    * accuracy the swap buys.
     *
     * Scale notes (100 TB): the sketch path's shuffle is SKETCH-SIZED
     * by construction — map-side partial KMV reduces every scan
@@ -3492,12 +3376,7 @@ object TextAnalysis {
   }
 
   /** Pair-estimation stage of x43 over any (source, sk) SKETCH frame —
-    * shared VERBATIM by the batch query and the streaming twin's
-    * snapshot consumer ([[graft.streaming.StreamOps.kmvStream]]'s
-    * latest per-source snapshots; the alignScores sharing discipline):
-    * pure projections plus one inequality join over sketch-sized rows,
-    * so batch ≡ stream overlap by construction once the sketches
-    * match (StreamOpsSpec pins both links). */
+    * pure projections plus one inequality join over sketch-sized rows. */
   def kmvOverlapFromSketches(sk: DataFrame, k: Int): DataFrame = {
     val kL = k.toLong
     val a = sk.select(col("source").as("src_a"), col("sk").as("ska"))

@@ -3369,22 +3369,24 @@ class PipelineOpsSpec extends SparkSpecBase {
     assert(by(502L).getAs[Long]("n_win") == 0L &&
       by(502L).getAs[Long]("novelty_e6") == 1000000L)
     // set-bit census equals a JVM-side recompute of the distinct positions
-    val expectBits = Dedup.distinctWindows(corpus).select("g").distinct()
-      .as[String].collect().flatMap { g =>
-        (0 until Dedup.BloomK).map { i =>
-          val hex = java.security.MessageDigest.getInstance("MD5")
-            .digest(s"$g:$i".getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString.take(15)
-          java.lang.Long.parseLong(hex, 16) % Dedup.BloomMBits
-        }
-      }.distinct.length.toLong
+    def positions(g: String): Seq[Long] = (0 until Dedup.BloomK).map { i =>
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"$g:$i".getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString.take(15)
+      java.lang.Long.parseLong(hex, 16) % Dedup.BloomMBits
+    }
+    val windows = Dedup.distinctWindows(corpus).select("g").as[String].collect()
+    val expectBits = windows.distinct.flatMap(positions).distinct.length.toLong
     assert(by(500L).getAs[Long]("n_set_bits") == expectBits)
-    // the native sketch: partitioning-proof and duplicate-insensitive
+    // the native sketch over the per-window positions (one array per
+    // (doc, window) row): partitioning-proof and duplicate-insensitive
+    val pos = windows.toSeq.map(positions).toDF("pos")
     def bits(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      Dedup.streamingWindowBloom(df).collect().head.getSeq[Long](0)
-    val one = bits(corpus.repartition(1))
-    assert(one == bits(corpus.repartition(7)), "partitioning changed the bits")
-    assert(one == bits(corpus.union(corpus)), "duplicate rows changed the bits")
+      df.groupBy().agg(graft.functions.GraftFunctions
+        .bloom_sketch(col("pos"), Dedup.BloomMBits)).collect().head.getSeq[Long](0)
+    val one = bits(pos.repartition(1))
+    assert(one == bits(pos.repartition(7)), "partitioning changed the bits")
+    assert(one == bits(pos.union(pos)), "duplicate rows changed the bits")
     assert(one.map(java.lang.Long.bitCount(_).toLong).sum == expectBits)
     // out-of-range staged position fails loudly, never aliases
     val ex = intercept[org.apache.spark.SparkException] {
@@ -5266,24 +5268,6 @@ class PipelineOpsSpec extends SparkSpecBase {
     assert(out == want,
       s"MMR diverges from the greedy reference: ${(out diff want).take(3)} " +
         s"| ${(want diff out).take(3)}")
-  }
-
-  test("x40 cross-derivation: ingestDecideBatch over the whole arriving " +
-      "set equals the gated x40 row-for-row (different exact/near/" +
-      "subsumption constructions, same decisions)") {
-    val split = Dedup.IncrementalSplit
-    val docs = Tables.documents(spark, sf)
-    val c = org.apache.spark.sql.functions.col _
-    val batchForm = TextAnalysis.ingestDecideBatch(
-      docs.filter(c("doc_id") < split).select("doc_id", "text"),
-      docs.filter(c("doc_id") >= split).select("doc_id", "text"),
-      docs.filter(c("doc_id") < split).select("doc_id", "text"))
-      .collect().map(_.toSeq).toSet
-    val gated = TextAnalysis.x40IngestDecide(spark, sf)
-      .collect().map(_.toSeq).toSet
-    assert(batchForm == gated,
-      s"ingestDecideBatch/x40 drift: ${(batchForm -- gated).take(3)} | " +
-        s"${(gated -- batchForm).take(3)}")
   }
 
   test("x39 PMI collocations: integer-exact vs a driver-side census, " +

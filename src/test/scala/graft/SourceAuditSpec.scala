@@ -10,9 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * are the four tool mains, and query code takes no switch from the
   * process environment. A measurement that wants a different cut,
   * cadence or tokenizer runs Bench or perfbench on two commits; it does
-  * not flip a property inside a query path. Both lists are exact, so a
-  * stale entry fails as loudly as a new offender. Event time has one
-  * µs conversion, so no stream twin can order or fence on millis. */
+  * not flip a property inside a query path. Event time has one µs
+  * conversion, so no stream twin can order on millis. `StreamOps`
+  * holds an exact list of operators, and every mention of one under
+  * `src/main` names a member it has. The lists are exact, so a stale
+  * entry fails as loudly as a new offender. */
 class SourceAuditSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -74,5 +76,42 @@ class SourceAuditSpec extends AnyFunSuite {
       }
     }
     assert(millisSorts.isEmpty, s"sorts on ts.getTime (millis): $millisSorts")
+  }
+
+  test("StreamOps exposes exactly its kept operators; links name them") {
+    val streamOps = mainRoot.resolve("graft/streaming/StreamOps.scala")
+    // members at the object's indentation; a bare `private` one is
+    // internal and may come and go with the kept operators
+    val Member = """^  (private\[\w+\] )?(?:def|val|lazy val|case class|class|object|trait|type) +(\w+)""".r.unanchored
+    val members = lines(streamOps).collect {
+      case Member(vis, name) => name -> Option(vis).fold("public")(_.trim)
+    }.toSet
+    val kept = Set(
+      "changes", "KeyState", "materializedView",
+      "hourlyAgg", "sessionize", "dedupExact", "KeyedEvent", "LatestState",
+      "latestState", "FunnelState", "StageReached", "funnelStages",
+      "enrich", "attribute", "attributionStream", "nearDupCandidates",
+      "incrementalDedupStream", "lmScoreStream", "piiScrubStream",
+      "cmsStream", "hllStream", "normalizeStream", "gopherStream",
+      "chunkStream", "decodeStream", "audioDecodeStream",
+      "alignFilterStream",
+      "textDedupIngest", "textClusters", "imgDedupIngest", "imgClusters",
+      "crossModalManifest", "RollupSchema", "deltaAggCurrent",
+      "deltaAggStream").map(_ -> "public") ++ Set(
+      "micros",
+      "textDedupAbsorb", "absorbIntoStore", "resolutionView",
+      "textDedupSigs", "imgDedupAbsorb", "imgDedupHashes")
+      .map(_ -> "private[graft]")
+    assert(members == kept, s"added: ${members -- kept}; gone: ${kept -- members}")
+    // `StreamOps.member` in a scaladoc link or in prose; a link may
+    // wrap between `StreamOps` and `.member`
+    val Mention = """\bStreamOps((?:\s*\*?\s*\.\w+)?)""".r
+    val dangling = sources(mainRoot).flatMap { p =>
+      Mention.findAllMatchIn(new String(Files.readAllBytes(p), "UTF-8")).toSeq
+        .map(_.group(1).replaceAll("""[\s*.]""", ""))
+        .filter(n => n.nonEmpty && !kept.exists(_._1 == n))
+        .map(n => s"${p.getFileName}: $n")
+    }
+    assert(dangling.isEmpty, s"mentions of members StreamOps does not have: $dangling")
   }
 }

@@ -1,15 +1,19 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [--only q1,q2,...]
 
 Reads each SparkEntry query result (parquet written by graft.Verify),
 runs the corresponding oracle SQL from oracle_sql.json in DuckDB over the
 same parquet tables, sorts columns by name, and compares values strictly
 (with a numeric-diff report on failure so float issues are visible).
+Every declared oracle without a written result counts as FAIL. `--only`
+checks just the named oracles (after `graft.Verify <sf> <out> q1,q2,...`);
+a name with no oracle is an error.
 
 This file is local tooling only — never shipped in the library jar.
 """
+import argparse
 import glob
 import json
 import math
@@ -143,14 +147,26 @@ def compare(name, mine: pd.DataFrame, ref: pd.DataFrame) -> bool:
 
 
 def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    ap = argparse.ArgumentParser(description="Compare graft.Verify output with the DuckDB oracles.")
+    ap.add_argument("sf_dir")
+    ap.add_argument("out_dir")
+    ap.add_argument("--only", help="comma-separated query names: check just these oracles")
+    args = ap.parse_args()
+    sf_dir, out_dir = args.sf_dir, args.out_dir
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracle = json.load(f)
     results = sorted(
         p.rsplit("/", 1)[-1] for p in glob.glob(f"{out_dir}/*") if not p.endswith(".json"))
+    if args.only is not None:
+        only = [n for n in args.only.split(",") if n]
+        unknown = sorted(set(only) - set(oracle))
+        if not only or unknown:
+            ap.error(f"--only: no oracle for {unknown or 'an empty list'}")
+        oracle = {n: oracle[n] for n in only}
+        results = [n for n in results if n in oracle]
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     n_pass = n_fail = 0
     for name in results:
         parts = sorted(glob.glob(f"{out_dir}/{name}/part-*.parquet"))
