@@ -146,15 +146,4 @@ object CdcDdl {
     tables.flatMap(t => Seq(Operation.Insert, Operation.Update, Operation.Delete)
       .map(op => s"DROP TRIGGER IF EXISTS ${qi(triggerName(t.name, op))}")) :+
       dropLogTable(o) :+ dropSchemaTable(o)
-
-  /** Ack/retention statement (reference triggers.go:215): one ranged
-    * DELETE per batch, not per-row deletes. */
-  def truncateSql(uptoId: Long, o: Options = Options()): String =
-    s"DELETE FROM ${qi(o.logTable)} WHERE id <= $uptoId"
-
-  /** Ordered offset-range batch read (reference triggers.go:167 plus the
-    * WHERE clause our engine adds for offset tracking). */
-  def readBatchSql(afterId: Long, limit: Int, o: Options = Options()): String =
-    s"SELECT id, timestamp, tablename, operation, before, after " +
-      s"FROM ${qi(o.logTable)} WHERE id > $afterId ORDER BY id ASC LIMIT $limit"
 }

@@ -3,8 +3,11 @@ package graft.cdc
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The change-log relation: one append-only, totally-ordered stream of
   * changes from all monitored tables (reference triggers.go:410-419).
@@ -90,83 +93,49 @@ class ParquetChangeLog(dir: String) extends ChangeLog {
 
 /** JDBC-backed change log — the log table lives in the source database.
   *
-  * `limitClause` covers dialect differences (SQLite/standard `LIMIT n`
-  * vs Derby/ANSI `FETCH FIRST n ROWS ONLY`); everything else is plain
-  * SQL-92 so the same engine runs against SQLite in production and
-  * embedded Derby in tests.
-  *
-  * Reads go through spark.read.jdbc with the offset predicate *inside*
-  * the pushed query, so SQLite does an index-ordered seek (keyset
-  * pagination, no OFFSET scan — reference triggers.go:539-568 rationale).
+  * Every statement comes from [[LogJdbc]]: `readBatch` is one driver-side
+  * keyset read (reference triggers.go:167), `truncate` the ranged DELETE
+  * in one transaction, and `readFrom` the `cdc-log` source's batch form.
+  * Connection settings travel in `url`. `limitClause` adds the dialect's
+  * limit to the keyset read (SQLite/standard `LIMIT n`, Derby/ANSI
+  * `FETCH FIRST n ROWS ONLY`); the read is capped without it too, so the
+  * same engine runs against SQLite in production and embedded Derby in
+  * tests.
   */
 class JdbcChangeLog(
     url: String,
-    connProps: java.util.Properties = new java.util.Properties(),
     logTable: String = CdcDdl.DefaultLogTable,
-    limitClause: Int => String = n => s"LIMIT $n",
-    connectionInit: Seq[String] = Nil) extends ChangeLog {
+    limitClause: Int => String = n => s"LIMIT $n") extends ChangeLog {
 
   @volatile private var committed: Long = -1L
   override def committedOffset: Long = committed
 
-  private def withConn[A](f: java.sql.Connection => A): A = {
-    val c = java.sql.DriverManager.getConnection(url, connProps)
-    try {
-      connectionInit.foreach { sql =>
-        val st = c.createStatement(); try st.execute(sql) finally st.close()
-      }
-      f(c)
-    } finally c.close()
+  override def readBatch(spark: SparkSession, afterId: Long, limit: Int): DataFrame = {
+    val rows = LogJdbc.withConn(url)(
+      LogJdbc.rowsAfter(_, logTable, afterId, limit, limitClause = limitClause(limit)) { rs =>
+        Row(rs.getLong(1), rs.getString(2), rs.getString(3), rs.getString(4),
+          rs.getString(5), rs.getString(6))
+      })
+    spark.createDataFrame(rows.asJava, rowSchema)
   }
 
-  /** Lower-case aliases keep the result schema identical across dialects
-    * ("timestamp" is reserved in some; unquoted identifiers fold to upper
-    * case in others). */
-  private val selectList =
-    Seq("id", "timestamp", "tablename", "operation", "before", "after")
-      .map(c => s""""$c" AS "$c"""").mkString(", ")
-
-  /** One JDBC reader shape for every read path: credentials in connProps
-    * and the connectionInit PRAGMAs (as sessionInitStatement) must apply
-    * to readBatch and readFrom alike.
-    */
-  private def jdbcRead(spark: SparkSession, query: String): DataFrame = {
-    val reader = spark.read.format("jdbc")
-      .option("url", url)
-      .option("query", query)
-      .options(scala.jdk.CollectionConverters.PropertiesHasAsScala(connProps)
-        .asScala.map { case (k, v) => (k.toString, v.toString) }.toMap)
-    connectionInit.headOption
-      .fold(reader)(_ => reader
-        .option("sessionInitStatement", connectionInit.mkString("; ")))
-      .load()
-  }
-
-  override def readBatch(spark: SparkSession, afterId: Long, limit: Int): DataFrame =
-    jdbcRead(spark, s"SELECT $selectList " +
-      s"FROM $logTable WHERE \"id\" > $afterId ORDER BY \"id\" ASC ${limitClause(limit)}")
+  /** [[Change.logSchema]] with every field nullable: a foreign producer's
+    * null `tablename` or `operation` must stay visible to the engine's
+    * dead-letter `isNull` test, which Spark folds to false on a
+    * non-nullable field. */
+  private val rowSchema = StructType(Change.logSchema.map(_.copy(nullable = true)))
 
   override def readFrom(spark: SparkSession, afterId: Long): DataFrame =
-    jdbcRead(spark, s"SELECT $selectList FROM $logTable WHERE \"id\" > $afterId")
+    spark.read.format("cdc-log").option("url", url).option("logTable", logTable)
+      .option("startingId", afterId).load()
 
   override def truncate(uptoId: Long): Unit = {
-    withConn { c =>
-      c.setAutoCommit(false)
-      val st = c.createStatement()
-      try { st.executeUpdate(s"DELETE FROM $logTable WHERE \"id\" <= $uptoId"); c.commit() }
-      catch { case e: Throwable => c.rollback(); throw e }
-      finally st.close()
-    }
+    LogJdbc.withConn(url)(LogJdbc.deleteUpTo(_, logTable, uptoId))
     committed = math.max(committed, uptoId)
   }
 
   /** Execute setup/teardown DDL in one transaction (reference
     * triggers.go:334-395). */
-  def executeDdl(statements: Seq[String]): Unit = withConn { c =>
-    c.setAutoCommit(false)
-    val st = c.createStatement()
-    try { statements.foreach(st.execute); c.commit() }
-    catch { case e: Throwable => c.rollback(); throw e }
-    finally st.close()
-  }
+  def executeDdl(statements: Seq[String]): Unit =
+    LogJdbc.withConn(url)(LogJdbc.inTransaction(_)(st => statements.foreach(st.execute)))
 }

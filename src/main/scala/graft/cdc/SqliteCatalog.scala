@@ -115,10 +115,4 @@ object SqliteCatalog {
     }
     DbMeta(file, journal, metas)
   }
-
-  /** Connection-init PRAGMAs every CDC connection needs (reference
-    * README.md:205-209, cmd/sqlite-cdc/main.go:57): WAL so reads don't
-    * block writers, busy_timeout for writer contention. */
-  val connectionInitSql: Seq[String] =
-    Seq("PRAGMA journal_mode=WAL", "PRAGMA busy_timeout=5000")
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.sql.{Connection, DriverManager, ResultSet}
-import java.util.Properties
+import java.sql.{Connection, ResultSet}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -14,7 +13,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.cdc.{CdcDdl, Change}
+import graft.cdc.{CdcDdl, Change, LogJdbc}
 
 /** Structured Streaming source for the CDC change log — the proper
   * `MicroBatchStream` form of SURVEY.md §2.1 S2 ("v2" in §7.1 step 8).
@@ -38,6 +37,9 @@ import graft.cdc.{CdcDdl, Change}
   *   .option("truncateOnCommit", true) // reference delete-after-ack
   *   .load()
   * }}}
+  *
+  * Every statement on the log table comes from [[graft.cdc.LogJdbc]];
+  * connection settings (PRAGMAs, credentials) travel in the URL.
   *
   * Scale notes (100 TB): one SQLite file caps capture throughput, so the
   * scale topology is many source databases → many of these streams →
@@ -66,23 +68,7 @@ private[streaming] case class CdcLogConf(
     maxBatchSize: Int,
     truncateOnCommit: Boolean,
     startingId: Long,
-    numPartitions: Int,
-    connectionInit: Seq[String]) {
-
-  def connect(): Connection = {
-    val c = DriverManager.getConnection(url, new Properties())
-    connectionInit.foreach { sql =>
-      val st = c.createStatement(); try st.execute(sql) finally st.close()
-    }
-    c
-  }
-
-  /** Quoted lower-case identifiers: SQLite is caseless, Derby (tests)
-    * folds unquoted names — same convention as JdbcChangeLog. */
-  val selectSql: String =
-    Seq("id", "timestamp", "tablename", "operation", "before", "after")
-      .map(c => s""""$c"""").mkString("SELECT ", ", ", s" FROM $logTable")
-}
+    numPartitions: Int)
 
 private[streaming] object CdcLogConf {
   def apply(o: CaseInsensitiveStringMap): CdcLogConf = CdcLogConf(
@@ -92,8 +78,7 @@ private[streaming] object CdcLogConf {
     maxBatchSize = o.getInt("maxBatchSize", 256),
     truncateOnCommit = o.getBoolean("truncateOnCommit", false),
     startingId = o.getLong("startingId", -1L),
-    numPartitions = o.getInt("numPartitions", 1),
-    connectionInit = Option(o.get("connectionInit")).toSeq.flatMap(_.split(";;")))
+    numPartitions = o.getInt("numPartitions", 1))
 }
 
 /** The stream offset: highest log id included so far (exclusive start of
@@ -132,37 +117,10 @@ private[streaming] class CdcLogScan(conf: CdcLogConf) extends Scan {
   }
 }
 
-/** Driver-side JDBC helpers shared by the stream and batch forms. */
+/** Driver-side helpers shared by the stream and batch forms. */
 private[streaming] object CdcLogJdbc {
-  def maxId(conf: CdcLogConf): Option[Long] = {
-    val c = conf.connect()
-    try {
-      val st = c.createStatement()
-      try {
-        val rs = st.executeQuery(s"""SELECT MAX("id") FROM ${conf.logTable}""")
-        if (rs.next()) { val v = rs.getLong(1); if (rs.wasNull()) None else Some(v) }
-        else None
-      } finally st.close()
-    } finally c.close()
-  }
-
-  /** The id of the n-th row after `afterId` (row-exact admission even if
-    * ids have gaps, e.g. after truncation). Uses Statement.setMaxRows —
-    * dialect-free (SQLite LIMIT vs Derby FETCH FIRST both unneeded). */
-  def idOfNthRowAfter(conf: CdcLogConf, afterId: Long, n: Int): Option[Long] = {
-    val c = conf.connect()
-    try {
-      val st = c.createStatement()
-      st.setMaxRows(n)
-      try {
-        val rs = st.executeQuery(
-          s"""SELECT "id" FROM ${conf.logTable} WHERE "id" > $afterId ORDER BY "id" ASC""")
-        var last: Option[Long] = None
-        while (rs.next()) last = Some(rs.getLong(1))
-        last
-      } finally st.close()
-    } finally c.close()
-  }
+  def maxId(conf: CdcLogConf): Option[Long] =
+    LogJdbc.withConn(conf.url)(LogJdbc.maxId(_, conf.logTable))
 
   /** Split (lo, hi] into ≤ numPartitions contiguous id ranges. */
   def splitRange(conf: CdcLogConf, lo: Long, hi: Long): Array[InputPartition] = {
@@ -199,8 +157,11 @@ private[streaming] class CdcLogMicroBatchStream(conf: CdcLogConf)
     val after = start.asInstanceOf[CdcLogOffset].id
     val end = limit match {
       case r: ReadMaxRows =>
-        CdcLogJdbc.idOfNthRowAfter(conf, after,
-          math.min(r.maxRows(), Int.MaxValue.toLong).toInt)
+        // the id of the n-th row after `after`: row-exact admission even
+        // if ids have gaps, e.g. after truncation
+        val n = math.min(r.maxRows(), Int.MaxValue.toLong).toInt
+        LogJdbc.withConn(conf.url)(
+          LogJdbc.rowsAfter(_, conf.logTable, after, n, Seq("id"))(_.getLong(1))).lastOption
       case _ => CdcLogJdbc.maxId(conf).filter(_ > after)
     }
     val capped = availableNowTarget match {
@@ -227,17 +188,9 @@ private[streaming] class CdcLogMicroBatchStream(conf: CdcLogConf)
   /** Called after the micro-batch is durably committed to the checkpoint:
     * the reference's delete-after-ack (triggers.go:209-221), now atomic
     * with Spark's own progress tracking. */
-  override def commit(end: Offset): Unit = if (conf.truncateOnCommit) {
-    val upto = end.asInstanceOf[CdcLogOffset].id
-    val c = conf.connect()
-    try {
-      c.setAutoCommit(false)
-      val st = c.createStatement()
-      try { st.executeUpdate(s"""DELETE FROM ${conf.logTable} WHERE "id" <= $upto"""); c.commit() }
-      catch { case e: Throwable => c.rollback(); throw e }
-      finally st.close()
-    } finally c.close()
-  }
+  override def commit(end: Offset): Unit = if (conf.truncateOnCommit)
+    LogJdbc.withConn(conf.url)(
+      LogJdbc.deleteUpTo(_, conf.logTable, end.asInstanceOf[CdcLogOffset].id))
 
   override def stop(): Unit = ()
 }
@@ -263,10 +216,8 @@ private[streaming] class CdcLogPartitionReader(conf: CdcLogConf, lo: Long, hi: L
   private var rs: ResultSet = _
 
   private def ensureOpen(): Unit = if (conn == null) {
-    conn = conf.connect()
-    val st = conn.createStatement()
-    rs = st.executeQuery(
-      conf.selectSql + s""" WHERE "id" > $lo AND "id" <= $hi ORDER BY "id" ASC""")
+    conn = LogJdbc.connect(conf.url)
+    rs = LogJdbc.range(conn, conf.logTable, lo, hi)
   }
 
   override def next(): Boolean = { ensureOpen(); rs.next() }

@@ -520,6 +520,18 @@ object StreamOps {
       dir: String): Seq[(Long, org.apache.hadoop.fs.Path)] =
     prefixedDirs(s, dir, "v")
 
+  /** Delete every base `dir/v<n>` with n < id except the newest: a
+    * concurrent reader that listed that prior base must be able to
+    * finish its lazy scan, so it keeps one cycle of grace. */
+  private def prunePriorVersions(s: org.apache.spark.sql.SparkSession,
+      dir: String, id: Long): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    versionDirs(s, dir).filter(_._1 < id)
+      .sortBy(_._1).dropRight(1)
+      .foreach { case (_, p) => fs.delete(p, true) }
+  }
+
   /** Streaming d6: the TEXT near-dup cluster resolution maintained
     * CONTINUOUSLY: because [[graft.operators.Components.absorb]]
     * does delta-sized work, EVERY batch writes an exact successor
@@ -653,9 +665,7 @@ object StreamOps {
         .map(_._1).sorted.lastOption.getOrElse(-1L)
       deltaDirs(s, storeDir).filter(_._1 <= priorBase)
         .foreach { case (_, p) => fs.delete(p, true) }
-      versionDirs(s, storeDir).filter(_._1 < id)
-        .sortBy(_._1).dropRight(1)
-        .foreach { case (_, p) => fs.delete(p, true) }
+      prunePriorVersions(s, storeDir, id)
     }
   }
 
@@ -850,12 +860,6 @@ object StreamOps {
         val base = deltaAggCurrent(s, storeDir, before = id)
         graft.operators.Events.absorbDelta(base, delta)
           .write.mode("overwrite").parquet(s"$storeDir/v$id")
-        // prune all versions older than the new base
-        val path = new org.apache.hadoop.fs.Path(storeDir)
-        val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        versionDirs(s, storeDir).filter(_._1 < id)
-          .sortBy(_._1).dropRight(1)
-          .foreach { case (_, p) => fs.delete(p, true) }
-        ()
+        prunePriorVersions(s, storeDir, id)
       }
 }

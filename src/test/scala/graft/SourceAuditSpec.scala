@@ -13,8 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * not flip a property inside a query path. Event time has one µs
   * conversion, so no stream twin can order on millis. `StreamOps`
   * holds an exact list of operators, and every mention of one under
-  * `src/main` names a member it has. The lists are exact, so a stale
-  * entry fails as loudly as a new offender. */
+  * `src/main` names a member it has. The change-log table's SQL lives
+  * in `LogJdbc`, so only it and the schema freeze delete rows. The
+  * lists are exact, so a stale entry fails as loudly as a new
+  * offender. */
 class SourceAuditSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -113,5 +115,12 @@ class SourceAuditSpec extends AnyFunSuite {
         .map(n => s"${p.getFileName}: $n")
     }
     assert(dangling.isEmpty, s"mentions of members StreamOps does not have: $dangling")
+  }
+
+  test("only LogJdbc and the schema freeze in CdcDdl delete rows") {
+    val deleting = sources(mainRoot).filter(p => lines(p).exists(_.contains("DELETE FROM")))
+      .map(p => mainRoot.resolve("graft").relativize(p).toString)
+    assert(deleting == Seq("cdc/CdcDdl.scala", "cdc/LogJdbc.scala"),
+      s"files with DELETE FROM: $deleting")
   }
 }

@@ -18,18 +18,22 @@ class JdbcChangeLogSpec extends SparkSpecBase {
     s"jdbc:derby:$dir/db;create=true"
   }
 
-  private def setupLog(url: String, rows: Int): Unit = {
+  /** A Derby log table named `table`, quoted as setup quotes it
+    * (`CdcDdl.qi`; `CDC_LOG` reads the same quoted or not). A foreign
+    * producer's table may leave `tablename` nullable. */
+  private def setupLog(url: String, rows: Int, table: String = "CDC_LOG",
+      tablenameNull: String = "NOT NULL"): Unit = {
     val c = DriverManager.getConnection(url)
     try {
       val st = c.createStatement()
-      // lower-case quoted identifiers: match what JdbcChangeLog's
+      // lower-case quoted identifiers: match what the log reader's
       // dialect-neutral select list references (SQLite is caseless here;
       // Derby is case-sensitive for quoted names)
-      st.execute("""CREATE TABLE CDC_LOG (
+      st.execute(s"""CREATE TABLE ${CdcDdl.qi(table)} (
         "id" BIGINT PRIMARY KEY, "timestamp" VARCHAR(30) NOT NULL,
-        "tablename" VARCHAR(128) NOT NULL, "operation" VARCHAR(10) NOT NULL,
+        "tablename" VARCHAR(128) $tablenameNull, "operation" VARCHAR(10) NOT NULL,
         "before" CLOB, "after" CLOB)""")
-      val ps = c.prepareStatement("INSERT INTO CDC_LOG VALUES (?, ?, ?, ?, ?, ?)")
+      val ps = c.prepareStatement(s"INSERT INTO ${CdcDdl.qi(table)} VALUES (?, ?, ?, ?, ?, ?)")
       (0 until rows).foreach { i =>
         ps.setLong(1, i.toLong)
         ps.setString(2, f"2024-05-06 00:00:${i % 60}%02d.000")
@@ -44,9 +48,23 @@ class JdbcChangeLogSpec extends SparkSpecBase {
     } finally c.close()
   }
 
-  private def derbyLog(url: String) = new JdbcChangeLog(
-    url, logTable = "CDC_LOG",
+  private def derbyLog(url: String, table: String = "CDC_LOG") = new JdbcChangeLog(
+    url, logTable = table,
     limitClause = n => s"FETCH FIRST $n ROWS ONLY")
+
+  private def logCount(url: String, table: String = "CDC_LOG"): Int = {
+    val c = DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement().executeQuery(s"SELECT COUNT(*) FROM ${CdcDdl.qi(table)}")
+      rs.next()
+      rs.getInt(1)
+    } finally c.close()
+  }
+
+  private val Pk = """"pk":(\d+)""".r.unanchored
+  private def pk(ch: Change): Int = ch.before.orElse(ch.after).get match {
+    case Pk(n) => n.toInt
+  }
 
   test("offset-range batch read pushes predicate + order + limit into the DB") {
     val url = newDerby(); setupLog(url, 25)
@@ -54,6 +72,7 @@ class JdbcChangeLogSpec extends SparkSpecBase {
     val batch = log.readBatch(spark, afterId = 9, limit = 10).collect()
     assert(batch.length == 10)
     assert(batch.map(_.getLong(0)).toSeq == (10L to 19L))
+    assert(log.readFrom(spark, 9).collect().map(_.getLong(0)).sorted.toSeq == (10L to 24L))
   }
 
   test("full engine drain over JDBC: ordered batches, transactional ack deletes the log") {
@@ -92,5 +111,37 @@ class JdbcChangeLogSpec extends SparkSpecBase {
     val rec2 = new RecordingHandler
     new CdcEngine(spark, log, rec2).cdcAvailableNow()
     assert(rec2.all.map(_.after.get) == Seq("""{"pk":100}"""))
+  }
+
+  test("a log table whose name needs quoting drains through the engine and the cdc-log source") {
+    val url = newDerby(); setupLog(url, 30, table = "cdc log")
+    val read = spark.read.format("cdc-log")
+      .option("url", url).option("logTable", "cdc log").load()
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(read == (0L until 30L))
+    val rec = new RecordingHandler
+    val n = new CdcEngine(spark, derbyLog(url, "cdc log"), rec, maxBatchSize = 25)
+      .cdcAvailableNow()
+    assert(n == 30)
+    assert(rec.batches.map(_.size) == Seq(25, 5))
+    assert(rec.all.map(pk) == (0 until 30))
+    assert(logCount(url, "cdc log") == 0)
+  }
+
+  test("dead-letter over a JDBC log: a null tablename from a foreign producer " +
+      "reaches the side sink, the other rows deliver in order and all ack") {
+    val url = newDerby(); setupLog(url, 10, tablenameNull = "")
+    val c = DriverManager.getConnection(url)
+    try c.createStatement().executeUpdate(
+      """UPDATE CDC_LOG SET "tablename" = NULL WHERE "id" = 4""")
+    finally c.close()
+    val rec = new RecordingHandler
+    val dead = new RecordingHandler
+    val n = new CdcEngine(spark, derbyLog(url), rec, deadLetter = Some(dead))
+      .cdcAvailableNow()
+    assert(n == 10)
+    assert(dead.all.map(ch => (ch.table, pk(ch))) == Seq((null, 4)))
+    assert(rec.all.map(pk) == (0 until 10).filter(_ != 4))
+    assert(logCount(url) == 0)
   }
 }

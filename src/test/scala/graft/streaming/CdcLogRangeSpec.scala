@@ -11,8 +11,7 @@ class CdcLogRangeSpec extends AnyFunSuite {
 
   private def conf(n: Int) = CdcLogConf(
     url = "jdbc:unused", logTable = "t", maxBatchSize = 10,
-    truncateOnCommit = false, startingId = -1L, numPartitions = n,
-    connectionInit = Nil)
+    truncateOnCommit = false, startingId = -1L, numPartitions = n)
 
   test("property: splitRange partitions (lo, hi] exactly — disjoint, covering, ordered") {
     val prop = Prop.forAll(
